@@ -993,124 +993,6 @@ def connected_components(
     )
 
 
-def span_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span: int = 20,
-    stride: int = 10,
-) -> DataFrame:
-    """Per-document DISTINCT fingerprints of fixed-length token windows:
-    md5 of each ``span``-token window taken every ``stride`` tokens —
-    (id, span_fp) rows.
-
-    This is the substring-level signal the shingle/Jaccard family misses:
-    a doc that embeds a paragraph of another doc shares its window
-    fingerprints even when whole-document similarity is low (the
-    "train-on-dup-substrings" failure mode exact-substring dedup targets).
-
-    Built narrow like the decontamination gram table: window slicing and
-    the per-doc ``array_distinct`` happen inside the row (no corpus-wide
-    distinct shuffle), and md5 keeps the fingerprint portable to the
-    DuckDB twin. Docs shorter than ``span`` tokens emit nothing — they
-    cannot contain a full window.
-    """
-    if span < 1 or stride < 1:
-        raise ValueError(f"span and stride must be ≥ 1, got {span}, {stride}")
-    prepared = (
-        _parallelize_small(df.select(id_col, text_col))
-        .withColumn("__words", words(F.lower(F.col(text_col))))
-        .withColumn(
-            "__fps",
-            F.when(
-                F.size("__words") < span, F.array().cast("array<string>")
-            ).otherwise(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.size("__words") - span + 1,
-                            F.lit(stride),
-                        ),
-                        lambda i: F.md5(
-                            F.array_join(F.slice("__words", i, span), " ")
-                        ),
-                    )
-                )
-            ),
-        )
-    )
-    return prepared.select(F.col(id_col), F.explode("__fps").alias("span_fp"))
-
-
-def repeated_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span: int = 20,
-    stride: int = 10,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Token spans repeated across ≥ ``min_docs`` DISTINCT documents:
-    (span_fp, n_docs, example_id). One partial-aggregated shuffle on the
-    16-byte fingerprint — the same linear shape as exact_dedup, applied at
-    sub-document granularity.
-    """
-    return (
-        span_fingerprints(df, id_col, text_col, span, stride)
-        .groupBy("span_fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("example_id"),
-        )
-        .filter(F.col("n_docs") >= min_docs)
-    )
-
-
-def docs_sharing_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span: int = 20,
-    stride: int = 10,
-) -> DataFrame:
-    """Per-document cross-duplication signal: how many of the doc's
-    windows also appear in OTHER docs — (id, n_spans, n_shared_spans,
-    shared_frac). The curation filter drops or trims docs above a
-    shared_frac threshold.
-
-    The span table is computed once and self-joined on the fingerprint
-    (keyed shuffle, no pair blowup beyond true fingerprint co-occurrence);
-    ``materialize`` persists it so the two branches share one scan.
-    """
-    fps = _materialize(span_fingerprints(df, id_col, text_col, span, stride))
-    totals = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_spans"))
-    shared = (
-        fps.alias("a")
-        .join(
-            fps.select(
-                F.col(id_col).alias("__other_id"), "span_fp"
-            ).alias("b"),
-            (F.col("a.span_fp") == F.col("b.span_fp"))
-            & (F.col(f"a.{id_col}") != F.col("__other_id")),
-        )
-        .select(f"a.{id_col}", "a.span_fp")
-        .distinct()
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_shared_spans"))
-    )
-    return (
-        totals.join(shared, id_col, "left")
-        .withColumn(
-            "n_shared_spans", F.coalesce(F.col("n_shared_spans"), F.lit(0))
-        )
-        .withColumn(
-            "shared_frac",
-            F.col("n_shared_spans").cast("double") / F.col("n_spans"),
-        )
-    )
-
-
 def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -498,12 +498,14 @@ def dsir_ngram_features(
         F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
         lambda a, b: F.concat(a, F.lit(_DSIR_JOIN), b),
     )
+    narrow = [F.col(id_col), F.col(text_col)]
     cols = [F.col(id_col), F.explode(F.concat(t, bigrams)).alias("__feat")]
     keys = [id_col, hash_bucket(F.col("__feat"), n_buckets).alias("bucket")]
     if flag is not None:
         # null predicate (e.g. a null lang) counts as NOT-target, never a
         # silently dropped row
-        cols.insert(1, F.coalesce(flag, F.lit(False)).alias("__tgt"))
+        narrow.append(F.coalesce(flag, F.lit(False)).alias("__tgt"))
+        cols.insert(1, F.col("__tgt"))
         keys.insert(1, F.col("__tgt"))
     # Repartition the DOCUMENTS by id before the explode: hash-partitioning
     # on id satisfies the clustered distribution of every downstream
@@ -519,9 +521,11 @@ def dsir_ngram_features(
     # ~2 feature rows per token (unigram + bigram), each ≈ (id 8 B +
     # feature string ~10 chars + 8 B offset + ~16 B row overhead) ≈ 42 B,
     # against ~6.4 B of input text per token ⇒ ~13× post-explode bytes
-    # per input byte.
+    # per input byte.  The input is narrowed to (id, text[, __tgt]) first
+    # so the partition count is sized from the plan statistics of the
+    # bytes that feed the explode, not of the full-width input.
     return (
-        spread_for_explode(df, F.col(id_col), expansion=13)
+        spread_for_explode(df.select(*narrow), F.col(id_col), expansion=13)
         .select(*cols)
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("cnt"))

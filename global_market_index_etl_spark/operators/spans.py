@@ -10,13 +10,13 @@ re-expression is token-window fingerprinting:
 
 1. normalize + whitespace-tokenize each document (codegen, no Python);
 2. slide a ``k``-token window over every position → one row per window
-   occurrence (``transform(sequence(...))`` + ``explode`` — JVM-side);
+   occurrence (``transform(sequence(...))`` + ``posexplode`` — JVM-side);
 3. a window string is a DUPLICATE SPAN iff it occurs in more than one
    distinct document.
 
-``duplicate_window_profile`` returns the per-document summary (how much of
-the document is covered by cross-document duplicate spans) that a curation
-pipeline thresholds on.
+All four public operators are compositions of one kernel, each step
+defined once below: ``_tokens`` → ``_windows`` → (``_doc_windows``) →
+``_dup_verdicts`` → ``_rebuild`` / ``_profile``.
 
 At 100 TB the window-fingerprint key space is the same shape as the
 shingle shuffle in minhash_signatures (operators/dedup.py) and carries the
@@ -25,9 +25,8 @@ is ONE window fingerprint with 10^8 occurrence rows.  Any plan that
 funnels all rows of a fingerprint through one task (a window function
 ``count().over(Window.partitionBy(fingerprint))``, or an unsalted join
 against a duplicate-window set) is a straggler/OOM at that scale no matter
-how well it measures on test corpora.  Every operator in this module
-therefore computes per-fingerprint statistics with a SALTED TWO-PHASE
-AGGREGATE (round-12 verdict item 1):
+how well it measures on test corpora.  The verdicts are therefore a
+SALTED TWO-PHASE AGGREGATE (``_dup_verdicts``):
 
 - each row gets a deterministic salt in ``[0, n_salts)`` hashed from its
   identity columns, so one fingerprint's rows spread across ``n_salts``
@@ -44,37 +43,35 @@ AGGREGATE (round-12 verdict item 1):
   back on ``(fingerprint, salt)``, so the join-back ALSO spreads a hot
   fingerprint's occurrence rows instead of re-concentrating them.
 
-The occupancy-based replication is what makes the salt ADAPTIVE
-(round-13 verdict item 1): a flat ×``n_salts`` replication taxes every
-duplicated window — the dominant, cold case of a window shared by 2-5
-documents paid a 16× verdict fan-out it never used (measured ~4× on the
-whole span tier at sf1).  Occupancy replication emits 2 verdict rows for
-a 2-document window and all ``n_salts`` only for fingerprints hot enough
-to have touched every salt — the replication factor grows exactly with
-the skew it protects against, no threshold dial, no second pass (the
-occupied-salt list rides the partials the aggregate already shuffles).
+The occupancy-based replication makes the salt ADAPTIVE: a flat
+×``n_salts`` replication would tax every duplicated window — the dominant,
+cold case of a window shared by 2-5 documents would pay a 16× verdict
+fan-out it never uses (measured ~4× on the whole span tier at sf1).
+Occupancy replication emits 2 verdict rows for a 2-document window and
+all ``n_salts`` only for fingerprints hot enough to have touched every
+salt — the replication factor grows exactly with the skew it protects
+against, no threshold dial, no second pass (the occupied-salt list rides
+the partials the aggregate already shuffles).
 
 The result is value-identical to the window-function formulation (the
 DuckDB oracles still use plain windows — occurrence rows exist only at
 occupied (fingerprint, salt) pairs, so the occupancy join hits the same
 rows a full replication would) but no task ever holds more than
-``occurrences / n_salts`` rows of any fingerprint.  Raw window strings
-would make the shuffles ~k× the text size; every window travels as its
-``xxhash64`` fingerprint over the k-token array slice (8-byte long,
-computed in-row before the explode).  Round 16 (guide §2.3/§4.1):
-previously this was ``md5(concat_ws(...))`` — a 32-hex-char string that
-(a) materialized a ~6×k-byte window string per corpus position just to
-hash it, (b) ran a cryptographic digest per position, and (c) shuffled
-4-5× the bytes of an 8-byte key; the window-hash stages were the span
-tier's dominant executor cost (measured at sf1: 39-45 s exec per
-window-hash stage, 83-108 MB exchanges).  ``xxhash64(slice(__t, i, k))``
-hashes the token slice directly — no intermediate string, non-crypto
-hash, fixed 8-byte key.  Fingerprint semantics are unchanged up to
-64-bit collisions (P ≈ 2⁻⁶⁴ per distinct window pair — the same
-accepted equivalence as the hashed shingle keys in operators/dedup.py,
-whose queries carry full SQL oracles).  The DuckDB oracles keep their
-md5-over-string formulation: the fingerprint never appears in any
-output, so the comparison stays exact on the values that do.
+``occurrences / n_salts`` rows of any fingerprint.
+
+Raw window strings would make the shuffles ~k× the text size, so every
+window travels as a fixed-width fingerprint hashed in-row from the
+k-token array slice (no intermediate window string, non-crypto hash).
+Fingerprint semantics equal window-string semantics up to key
+collisions, and a collision deletes legitimate text from both windows'
+documents, so the bound that matters is the corpus-level birthday bound:
+with N distinct windows and a b-bit key the expected number of colliding
+pairs is ≈ N² / 2^(b+1).  At the 100 TB design point (N ≈ 10^13) a
+64-bit key expects ~3·10^6 collisions; the key is therefore 128 bits —
+``xxhash64`` of the slice under two different seeds (``_windows``) —
+and expects ~10^-13.  The DuckDB oracles keep their md5-over-string
+formulation: the fingerprint never appears in any output, so the
+comparison stays exact on the values that do.
 """
 
 from __future__ import annotations
@@ -82,6 +79,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .util import materialize, materialize_shared
 from .util import spread_for_explode as _spread_for_explode
 
 __all__ = [
@@ -99,23 +97,26 @@ __all__ = [
 # occurrence count regardless of this setting.
 N_SALTS = 16
 
-# Per-site explode expansion for the doc_id pre-distribution (r15 verdict
-# item 5: derive from the kernel's own shape, not the util default).
-# The stride-1 window generator emits ONE occurrence row per token
-# position regardless of k/min_len: (doc_id long 8B, __i int 4B, __w
-# long 8B, ~16B UnsafeRow overhead) ≈ 36 B/position against ~6.4 B of
-# input text per token (avg word + separator) ⇒ ~6× post-explode bytes
-# per input byte. (Before the xxhash64 switch the md5-string key made
-# this 8-50× depending on shuffle compressibility — the r15 constant 8
-# under-sized the top end; with an 8-byte key the fan-out is shape-
-# stable.)
-_SPAN_EXPANSION = 6
+# Per-site explode expansion for the doc_id pre-distribution, derived
+# from the kernel's own shape: the stride-1 window generator emits ONE
+# occurrence row per token position regardless of k/min_len: (doc_id
+# long 8B, __i int 4B, __w two longs 16B + 8B nested-row header, ~16B
+# UnsafeRow overhead) ≈ 52 B per position against ~6.4 B of input text
+# per token (avg word + separator) ⇒ ~8× post-explode bytes per input
+# byte.
+_SPAN_EXPANSION = 8
+
+# Seed hashed ahead of the slice for the key's second half: h1 is then
+# the slice hashed under a different xxhash64 seed (hashing the literal
+# AFTER the slice would make h1 a function of h0 and add no bits).
+_H1_SEED = 0x5EED
 
 
-def _norm_tokens(text_col: str):
-    return F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-    )
+def _check_params(k: int, n_salts: int, name: str = "k") -> None:
+    if k < 2:
+        raise ValueError(f"{name} must be >= 2, got {k}")
+    if n_salts < 1:
+        raise ValueError(f"n_salts must be >= 1, got {n_salts}")
 
 
 def _with_salt(df: DataFrame, n_salts: int, *cols: str) -> DataFrame:
@@ -132,38 +133,143 @@ def _with_salt(df: DataFrame, n_salts: int, *cols: str) -> DataFrame:
     )
 
 
-def _explode_occupied_salts(df: DataFrame) -> DataFrame:
-    """Fan per-fingerprint verdict rows out to the salt values their
-    occurrence rows actually landed on (the ``__occ`` list collected by
-    the totals aggregate, ≤ n_salts elements), so the join back to
-    occurrence rows keys on ``(__w, __salt)`` and a hot fingerprint
-    spreads over its occupied salts instead of one task — while a cold
-    window shared by two documents emits two verdict rows, not
-    ``n_salts`` (adaptive replication, module docstring)."""
-    others = [c for c in df.columns if c != "__occ"]
-    return df.select(*others, F.explode("__occ").alias("__salt"))
+def _tokens(docs: DataFrame, doc_id: str, text_col: str) -> DataFrame:
+    """``(doc_id, __t)``: the normalized token array of every non-empty
+    document.
+
+    The documents are pre-partitioned by id, sized for the window explode
+    downstream: hashpartitioning(doc_id) satisfies the clustered
+    distribution of every per-document aggregation and of the covered-set
+    join, so all of them run exchange-free and the shuffle moves one row
+    per document instead of one row per window occurrence (measured
+    19.8 s → 7.5 s at sf1).  The token array is deliberately recomputed
+    per consumer rather than persisted: a persist measured SLOWER at sf0.1
+    and sf1, because the codegen tokenize runs at scan speed — persist
+    only if a Python tokenizer ever replaces it.
+    """
+    return (
+        _spread_for_explode(
+            docs.select(doc_id, text_col), F.col(doc_id),
+            expansion=_SPAN_EXPANSION,
+        )
+        .select(
+            doc_id,
+            F.split(
+                F.trim(
+                    F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
+                ),
+                " ",
+            ).alias("__t"),
+        )
+        .where(F.length(F.trim(F.col(text_col))) > 0)
+    )
 
 
-def _check_params(k: int, n_salts: int, name: str = "k") -> None:
-    if k < 2:
-        raise ValueError(f"{name} must be >= 2, got {k}")
-    if n_salts < 1:
-        raise ValueError(f"n_salts must be >= 1, got {n_salts}")
+def _windows(toks: DataFrame, doc_id: str, k: int) -> DataFrame:
+    """``(doc_id, __i, __w)``: one row per stride-1 ``k``-token window,
+    ``__i`` its 1-based start position and ``__w`` its 128-bit
+    fingerprint ``struct<h0, h1>`` (module docstring) — the one place the
+    window-key format is defined.  One column, so every exchange, join
+    and aggregate downstream keys on ``__w`` unchanged."""
+    return toks.where(F.size("__t") >= k).select(
+        doc_id,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(1, size(__t) - {k - 1}),"
+                f" i -> named_struct('h0', xxhash64(slice(__t, i, {k})),"
+                f" 'h1', xxhash64({_H1_SEED}, slice(__t, i, {k}))))"
+            )
+        ).alias("__p0", "__w"),
+    ).select(doc_id, (F.col("__p0") + 1).alias("__i"), "__w")
 
 
-def _rebuild_from_covered(
-    toks: DataFrame, covered: DataFrame, doc_id: str
+def _doc_windows(wins: DataFrame, doc_id: str, n_salts: int) -> DataFrame:
+    """``(__w, doc_id, __pos, __salt)``: one row per (window, document)
+    with the window's start positions in that document, salted by
+    document and repartitioned on ``(__w, __salt)``.
+
+    The (window, doc) groupBy is exchange-free under the doc_id
+    pre-partition.  Distributing the REDUCTION on ``(__w, __salt)`` up
+    front lets its two consumers — the verdict partial aggregate and the
+    join-back probe — both run without re-shuffling it, also when the
+    table is persisted (one pre-cache exchange instead of two post-cache
+    ones).
+    """
+    return _with_salt(
+        wins.groupBy("__w", doc_id).agg(F.collect_list("__i").alias("__pos")),
+        n_salts,
+        doc_id,
+    ).repartition(F.col("__w"), F.col("__salt"))
+
+
+def _dup_verdicts(
+    rows: DataFrame, doc_id: str, survivor: bool = False
 ) -> DataFrame:
-    """Rebuild each document IN-ROW from its covered-position set:
-    surviving positions = ``array_except(sequence(1, n), covered)``
-    (order-preserving), token lookup via a higher-order ``transform`` —
-    no per-token explode, no (doc, position) anti-join shuffle, no
-    collect/sort re-aggregation (round 14; the exploded-token anti-join
-    this replaces shuffled corpus-token-sized rows and dominated the
-    30× span tier).  ``covered`` is one row per document that has any
-    covered position (``__cov`` array<int>, bounded by doc length);
-    documents without one keep every token."""
-    pre = toks.join(covered, doc_id, "left").select(
+    """``(__w, __dup[, __surv], __salt)``: the salted two-phase aggregate
+    over ``(__w, __salt)``-salted rows, keeping windows counted in more
+    than one row, replicated to their occupied salts (module docstring).
+
+    Over ``_doc_windows`` rows the count is the window's distinct-document
+    frequency; over ``_windows`` rows it is its global occurrence count.
+    ``survivor`` adds ``__surv``, the corpus-wide first occurrence
+    ``min(struct(doc_id, __i))`` — a min of per-salt mins, exact under
+    any split.
+    """
+    partial = [F.count(F.lit(1)).alias("__pc")]
+    total = [F.sum("__pc").alias("__n")]
+    keep = ["__w", F.lit(True).alias("__dup")]
+    if survivor:
+        partial.append(
+            F.min(F.struct(F.col(doc_id), F.col("__i"))).alias("__ps")
+        )
+        total.append(F.min("__ps").alias("__surv"))
+        keep.append("__surv")
+    verdicts = (
+        rows.groupBy("__w", "__salt")
+        .agg(*partial)
+        .groupBy("__w")
+        .agg(*total, F.collect_list("__salt").alias("__occ"))
+        .where(F.col("__n") > 1)
+        .select("__occ", *keep)
+    )
+    # the literal is projected BELOW the explode: in the explode's own
+    # select it would cost an extra Project over the Generate
+    return verdicts.select(
+        *verdicts.columns[1:], F.explode("__occ").alias("__salt")
+    )
+
+
+def _covered_by_starts(k: int) -> str:
+    """SQL for the token positions covered by the ``k``-windows starting
+    at the positions in ``__pos``."""
+    return (
+        f"array_distinct(flatten(transform(__pos,"
+        f" i -> sequence(i, i + {k - 1}))))"
+    )
+
+
+def _rebuild(
+    toks: DataFrame, rows: DataFrame, doc_id: str, covered: str
+) -> DataFrame:
+    """Rebuild each document with the token positions that ``rows`` cover
+    (SQL ``covered``: an array of positions per row) removed.
+
+    The covered positions reduce to ONE set per document (``collect_set``
+    — bounded by document length, the same per-doc bound as the token
+    array itself), and the rebuild is IN-ROW: surviving positions =
+    ``array_except(sequence(1, n), covered)`` (order-preserving), tokens
+    looked up by position with a higher-order ``transform`` — no
+    per-token explode and no (doc, position) anti-join, which would
+    shuffle corpus-token-sized rows; only the covered positions travel.
+    Documents without a covered position keep every token.  Returns
+    ``(doc_id, cleaned_text, n_tokens, n_removed_tokens)``.
+    """
+    cov = (
+        rows.select(doc_id, F.explode(F.expr(covered)).alias("__j"))
+        .groupBy(doc_id)
+        .agg(F.collect_set("__j").alias("__cov"))
+    )
+    pre = toks.join(cov, doc_id, "left").select(
         doc_id,
         "__t",
         F.array_except(
@@ -180,6 +286,17 @@ def _rebuild_from_covered(
         F.size("__t").cast("long").alias("n_tokens"),
         (F.size("__t") - F.size("__keep")).cast("long").alias(
             "n_removed_tokens"
+        ),
+    )
+
+
+def _profile(flagged: DataFrame, doc_id: str) -> DataFrame:
+    """``(doc_id, n_windows, n_dup_windows)`` from ``_doc_windows`` rows
+    left-joined to their verdicts."""
+    return flagged.groupBy(doc_id).agg(
+        F.sum(F.size("__pos")).alias("n_windows"),
+        F.sum(F.when(F.col("__dup"), F.size("__pos")).otherwise(0)).alias(
+            "n_dup_windows"
         ),
     )
 
@@ -206,53 +323,13 @@ def duplicate_window_profile(
     ``doc_frequency / n_salts`` rows.
     """
     _check_params(k, n_salts)
-    # Pre-partition the DOCUMENTS by id: hashpartitioning(doc_id) satisfies
-    # the clustered distribution of both the (doc_id, window) groupBy and
-    # the final per-document summary.  Moves one row per document instead
-    # of one row per window occurrence (same rewrite as
-    # sampling.dsir_ngram_features; measured 6.3 s → 2.3 s at sf1).
-    toks = (
-        _spread_for_explode(
-            docs.select(doc_id, text_col), F.col(doc_id),
-            expansion=_SPAN_EXPANSION,
-        )
-        .select(doc_id, _norm_tokens(text_col).alias("__t"))
-        .where(F.size("__t") >= k)
+    per_doc = _doc_windows(
+        _windows(_tokens(docs, doc_id, text_col), doc_id, k), doc_id, n_salts
     )
-    wins = toks.select(
-        doc_id,
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(__t) - {k - 1}),"
-                f" i -> xxhash64(slice(__t, i, {k})))"
-            )
-        ).alias("__w"),
+    flagged = per_doc.join(
+        _dup_verdicts(per_doc, doc_id), ["__w", "__salt"], "left"
     )
-    per_doc_win = _with_salt(
-        wins.groupBy(doc_id, "__w").agg(F.count(F.lit(1)).alias("__c")),
-        n_salts,
-        doc_id,
-    ).repartition(F.col("__w"), F.col("__salt"))
-    # salted two-phase document frequency: rows are one-per-(doc, window),
-    # so count per (__w, __salt) partials sum to the distinct-doc count.
-    dup_wins = _explode_occupied_salts(
-        per_doc_win.groupBy("__w", "__salt")
-        .agg(F.count(F.lit(1)).alias("__pc"))
-        .groupBy("__w")
-        .agg(
-            F.sum("__pc").alias("__df"),
-            F.collect_list("__salt").alias("__occ"),
-        )
-        .where(F.col("__df") > 1)
-        .select("__occ", "__w", F.lit(True).alias("__dup"))
-    )
-    flagged = per_doc_win.join(dup_wins, ["__w", "__salt"], "left")
-    return flagged.groupBy(doc_id).agg(
-        F.sum("__c").alias("n_windows"),
-        F.sum(F.when(F.col("__dup"), F.col("__c")).otherwise(0)).alias(
-            "n_dup_windows"
-        ),
-    )
+    return _profile(flagged, doc_id)
 
 
 def remove_duplicate_spans(
@@ -273,120 +350,37 @@ def remove_duplicate_spans(
     (whitespace-normalized non-empty) document:
     ``(doc_id, cleaned_text, n_tokens, n_removed_tokens)``.
 
-    Entirely JVM-side — no Python in the pipeline:
+    Entirely JVM-side — no Python in the pipeline: windows are reduced to
+    (window, doc) rows, the duplicate-window verdicts come from the salted
+    two-phase aggregate (module docstring), the inner join-back on
+    ``(__w, __salt)`` keeps only duplicated windows, and the documents are
+    rebuilt in-row from their covered positions.  All shuffles are keyed
+    by (window, salt) or doc — linear in corpus size with bounded
+    per-task rows.
 
-    1. tokenize; windows with positions (``posexplode`` of the transform);
-    2. duplicate-window set = windows with distinct-doc count > 1, via the
-       salted two-phase aggregate (module docstring) — map-side combined,
-       skew-proof;
-    3. covered token indexes = the dup verdicts joined back on
-       ``(__w, __salt)`` (inner join — only duplicated windows survive it)
-       exploded to their k positions, reduced to ONE sorted-set array per
-       document (``collect_set`` — bounded by document length, the same
-       per-doc state bound as the token array itself);
-    4. reconstruction is IN-ROW (round 14): surviving positions =
-       ``array_except(sequence(1, n), covered)`` (order-preserving,
-       hash-based), tokens looked up by position with a higher-order
-       ``transform`` + ``array_join``.  The previous shape posexploded
-       every corpus token and anti-joined on (doc, position) — a shuffle
-       of corpus-token-sized rows that dominated the 30× tier; the
-       array form shuffles only the covered positions (duplicated-window
-       fan-out, typically ≪ corpus tokens) and rebuilds at scan speed.
+    The (window, doc) reduction is materialized for its two consumers
+    (verdict aggregate + join-back probe): ReuseExchange does not fire
+    across them — column pruning gives the verdict side a narrower
+    exchange schema (no ``__pos``) than the probe side — so without the
+    persist the whole window explode + fingerprint pass runs TWICE (at
+    sf1: 39 s + 45 s executor time, the query's dominant cost).
 
-    All shuffles are keyed by (window, salt) or doc — linear in corpus
-    size with bounded per-task rows; the per-doc state (the token array
-    and the covered-position set) is bounded by document length, same as
-    every other text operator.
-
-    ``share_cache`` / ``checkpoint_dir`` carry duplicate_span_suite's
-    contract for the materialized (window, doc) reduction (round 16 —
-    see the inline comment): ``share_cache=True`` (default) memoizes the
-    persisted reduction per (process, plan), which REQUIRES the input to
-    be immutable between calls (the fixture parquet tables qualify); a
-    caller reading mutated source data must pass ``share_cache=False``;
-    ``checkpoint_dir`` switches to a reliable checkpoint for
-    executor-loss-safe cluster runs.
+    ``share_cache=True`` (default) memoizes the persisted reduction per
+    (process, plan) via :func:`util.materialize_shared`, which REQUIRES
+    the input to be immutable between calls (the fixture parquet tables
+    qualify); a caller reading mutated source data must pass
+    ``share_cache=False``.  ``checkpoint_dir`` switches to a reliable
+    checkpoint for executor-loss-safe cluster runs.
     """
     _check_params(k, n_salts)
-    from .util import materialize, materialize_shared
-
-    # the tokenized corpus is deliberately recomputed per consumer (a
-    # util.materialize persist of TOKS measured SLOWER at sf0.1 and sf1 —
-    # the eager count + cache write outweigh the recomputed codegen
-    # tokenize, which runs at scan speed). On a 100 TB corpus the same
-    # trade holds as long as tokenization stays codegen; persist only if
-    # a Python tokenizer ever replaces it.
-    # The doc_id pre-partition makes every per-document aggregation and
-    # the covered-set join downstream exchange-free (the recomputed
-    # tokenize subtrees all inherit it). Measured 19.8 s → 7.5 s at sf1
-    # under full materialization.
-    toks = (
-        _spread_for_explode(
-            docs.select(doc_id, text_col), F.col(doc_id),
-            expansion=_SPAN_EXPANSION,
-        )
-        .select(doc_id, _norm_tokens(text_col).alias("__t"))
-        .where(F.length(F.trim(F.col(text_col))) > 0)
-    )
-    winpos = toks.where(F.size("__t") >= k).select(
-        doc_id,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size(__t) - {k - 1}),"
-                f" i -> xxhash64(slice(__t, i, {k})))"
-            )
-        ).alias("__p0", "__w"),
-    ).select(doc_id, (F.col("__p0") + 1).alias("__i"), "__w")
-    # one winpos pass: group to (window, doc) with the doc's start
-    # positions (exchange-free under the doc_id pre-partition), then the
-    # salted two-phase distinct-doc frequency — no dup-set self-join, no
-    # second tokenize+explode of the corpus.
-    # The (window, doc) reduction is MATERIALIZED for its two consumers
-    # (verdict aggregate + join-back probe) exactly as in
-    # duplicate_span_suite: ReuseExchange does NOT fire across them —
-    # column pruning gives the verdict side a narrower exchange schema
-    # (no __pos) than the probe side, so without the persist the whole
-    # window explode + fingerprint pass runs TWICE (r16 profile at sf1:
-    # 39 s + 45 s executor time for the two copies, the query's dominant
-    # cost). The cached table is the post-shuffle reduction —
-    # corpus-window-set sized, bounded at scale like the suite's.
     _mat = materialize_shared if share_cache else materialize
+    toks = _tokens(docs, doc_id, text_col)
     per_doc = _mat(
-        _with_salt(
-            winpos.groupBy("__w", doc_id).agg(
-                F.collect_list("__i").alias("__pos")
-            ),
-            n_salts,
-            doc_id,
-        ).repartition(F.col("__w"), F.col("__salt")),
+        _doc_windows(_windows(toks, doc_id, k), doc_id, n_salts),
         checkpoint_dir=checkpoint_dir,
     )
-    dup_wins = _explode_occupied_salts(
-        per_doc.groupBy("__w", "__salt")
-        .agg(F.count(F.lit(1)).alias("__pc"))
-        .groupBy("__w")
-        .agg(
-            F.sum("__pc").alias("__nd"),
-            F.collect_list("__salt").alias("__occ"),
-        )
-        .where(F.col("__nd") > 1)
-        .select("__occ", "__w")
-    )
-    covered = (
-        per_doc.join(dup_wins, ["__w", "__salt"], "inner")
-        .select(
-            doc_id,
-            F.explode(
-                F.expr(
-                    f"array_distinct(flatten(transform(__pos,"
-                    f" i -> sequence(i, i + {k - 1}))))"
-                )
-            ).alias("__j"),
-        )
-        .groupBy(doc_id)
-        .agg(F.collect_set("__j").alias("__cov"))
-    )
-    return _rebuild_from_covered(toks, covered, doc_id)
+    dup = per_doc.join(_dup_verdicts(per_doc, doc_id), ["__w", "__salt"])
+    return _rebuild(toks, dup, doc_id, _covered_by_starts(k))
 
 
 def duplicate_span_suite(
@@ -410,114 +404,50 @@ def duplicate_span_suite(
     does (measured 2.6 s → 1.4 s at sf0.1, 8.9 s → ~5 s at sf1 under full
     materialization).  The persisted table is the POST-shuffle reduction —
     corpus-window-set sized, far smaller than the raw window occurrences,
-    so the cache cost stays bounded at scale.  The duplicate-window
-    verdicts (salted two-phase aggregate, module docstring) are then
-    cheap re-aggregations of the cached table, one per leg.
+    so the cache cost stays bounded at scale.
 
-    ``share_cache=True`` (default) memoizes the persisted reduction per
+    The FLAGGED table (reduction + verdict) is persisted too: the union
+    legs cannot share plan subtrees (Catalyst re-derives each union
+    branch), so without it the verdict aggregate and the (window, salt)
+    join-back run once PER LEG.  It is the reduction plus a boolean — the
+    same bounded cache footprint.
+
+    ``share_cache=True`` (default) memoizes the persisted tables per
     (process, plan) via :func:`util.materialize_shared`: repeat
     invocations over the same input reuse one persisted table instead of
-    stacking a fresh copy per call (round-11 advice).  THIS REQUIRES THE
-    INPUT TO BE IMMUTABLE between calls — the fixture parquet tables the
-    registry reads qualify; a caller whose semantically-identical plan
-    reads MUTATED source data (a maintained table path, a streaming delta
-    dir) must pass ``share_cache=False`` to get a private, per-call
-    materialization (round-12 advice).  ``checkpoint_dir`` switches the
-    materialization to a reliable checkpoint for executor-loss-safe
-    cluster runs (util.truncate_lineage semantics)."""
+    stacking a fresh copy per call.  THIS REQUIRES THE INPUT TO BE
+    IMMUTABLE between calls — the fixture parquet tables the registry
+    reads qualify; a caller whose semantically-identical plan reads
+    MUTATED source data (a maintained table path, a streaming delta dir)
+    must pass ``share_cache=False`` to get a private, per-call
+    materialization.  ``checkpoint_dir`` switches the materialization to
+    a reliable checkpoint for executor-loss-safe cluster runs
+    (util.truncate_lineage semantics)."""
     _check_params(k, n_salts)
-    from .util import materialize, materialize_shared
-
-    toks = (
-        _spread_for_explode(
-            docs.select(doc_id, text_col), F.col(doc_id),
-            expansion=_SPAN_EXPANSION,
-        )
-        .select(doc_id, _norm_tokens(text_col).alias("__t"))
-        .where(F.length(F.trim(F.col(text_col))) > 0)
-    )
-    winpos = toks.where(F.size("__t") >= k).select(
-        doc_id,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size(__t) - {k - 1}),"
-                f" i -> xxhash64(slice(__t, i, {k})))"
-            )
-        ).alias("__p0", "__w"),
-    ).select(doc_id, (F.col("__p0") + 1).alias("__i"), "__w")
-    _materialize = materialize_shared if share_cache else materialize
-    # cache the reduction ALREADY (__w, __salt)-partitioned: the cached
-    # table's outputPartitioning satisfies both downstream consumers —
-    # the verdict partial aggregate and the join-back probe — so neither
-    # re-shuffles it (the round-13 regression: two post-cache exchanges
-    # of the window-set table; one pre-cache exchange now serves both).
-    per_doc = _materialize(
-        _with_salt(
-            winpos.groupBy("__w", doc_id).agg(
-                F.collect_list("__i").alias("__pos")
-            ),
-            n_salts,
-            doc_id,
-        ).repartition(F.col("__w"), F.col("__salt")),
+    _mat = materialize_shared if share_cache else materialize
+    toks = _tokens(docs, doc_id, text_col)
+    per_doc = _mat(
+        _doc_windows(_windows(toks, doc_id, k), doc_id, n_salts),
         checkpoint_dir=checkpoint_dir,
     )
-    dup_wins = _explode_occupied_salts(
-        per_doc.groupBy("__w", "__salt")
-        .agg(F.count(F.lit(1)).alias("__pc"))
-        .groupBy("__w")
-        .agg(
-            F.sum("__pc").alias("__nd"),
-            F.collect_list("__salt").alias("__occ"),
-        )
-        .where(F.col("__nd") > 1)
-        .select("__occ", "__w", F.lit(True).alias("__dup"))
-    )
-    # cache the FLAGGED table too (round 16): the union legs cannot share
-    # plan subtrees (Catalyst re-derives each union branch), so without
-    # this persist the verdict aggregate AND the 8M-row (w, salt)
-    # join-back ran once PER LEG — measured at the 30× corpus: the
-    # dup_wins chain (two exchanges, 92 + 41 MiB written) and the
-    # sort-merge join-back each appeared twice in the executed plan.
-    # flagged is per_doc plus a boolean — same bounded cache footprint.
-    flagged = _materialize(
-        per_doc.join(dup_wins, ["__w", "__salt"], "left"),
+    flagged = _mat(
+        per_doc.join(
+            _dup_verdicts(per_doc, doc_id), ["__w", "__salt"], "left"
+        ),
         checkpoint_dir=checkpoint_dir,
     )
-
-    profile = (
-        flagged.groupBy(doc_id)
-        .agg(
-            F.sum(F.size("__pos")).alias("n_windows"),
-            F.sum(
-                F.when(F.col("__dup"), F.size("__pos")).otherwise(0)
-            ).alias("n_dup_windows"),
-        )
-        .select(
-            F.lit("profile").alias("leg"),
-            F.col(doc_id),
-            F.lit(None).cast("string").alias("cleaned_text"),
-            F.lit(None).cast("long").alias("n_tokens"),
-            F.lit(None).cast("long").alias("n_removed_tokens"),
-            F.col("n_windows").cast("long").alias("n_windows"),
-            F.col("n_dup_windows").cast("long").alias("n_dup_windows"),
-        )
+    profile = _profile(flagged, doc_id).select(
+        F.lit("profile").alias("leg"),
+        F.col(doc_id),
+        F.lit(None).cast("string").alias("cleaned_text"),
+        F.lit(None).cast("long").alias("n_tokens"),
+        F.lit(None).cast("long").alias("n_removed_tokens"),
+        F.col("n_windows").cast("long").alias("n_windows"),
+        F.col("n_dup_windows").cast("long").alias("n_dup_windows"),
     )
-
-    covered = (
-        flagged.where(F.col("__dup"))
-        .select(
-            doc_id,
-            F.explode(
-                F.expr(
-                    f"array_distinct(flatten(transform(__pos,"
-                    f" i -> sequence(i, i + {k - 1}))))"
-                )
-            ).alias("__j"),
-        )
-        .groupBy(doc_id)
-        .agg(F.collect_set("__j").alias("__cov"))
-    )
-    removal = _rebuild_from_covered(toks, covered, doc_id).select(
+    removal = _rebuild(
+        toks, flagged.where(F.col("__dup")), doc_id, _covered_by_starts(k)
+    ).select(
         F.lit("removal").alias("leg"),
         F.col(doc_id),
         "cleaned_text",
@@ -548,9 +478,9 @@ def exact_substring_dedup(
     corpus iff every one of its L-token sub-windows repeats, and the union
     of the token positions of all repeated L-windows IS the union of all
     repeated substrings of length ≥ L. Sliding an L-window at stride 1
-    (one xxhash64 fingerprint per position, JVM codegen) therefore
-    reproduces suffix-array coverage exactly — no stride alignment gap,
-    no approximation beyond the 64-bit fingerprint the whole span tier
+    (one fingerprint per position, JVM codegen) therefore reproduces
+    suffix-array coverage exactly — no stride alignment gap, no
+    approximation beyond the window fingerprint the whole span tier
     already rests on (module docstring).
 
     Two semantic upgrades over :func:`remove_duplicate_spans` (which keeps
@@ -573,74 +503,37 @@ def exact_substring_dedup(
 
     Plan shape (linear at any corpus size, skew-proof by construction):
     one stride-1 window explode (rows = corpus tokens), then the salted
-    two-phase verdict aggregate from the module docstring — per-(window,
-    salt) partials carry ``(count, min(doc, position))``, the ≤ n_salts
-    partials per window reduce to the global ``(cnt, survivor)`` (count
-    is additive, survivor is min-of-mins), and verdicts for windows with
-    ``cnt ≥ 2`` are joined back on ``(window, salt)`` so even a
+    two-phase verdict aggregate from the module docstring with the
+    survivor riding the partials, and verdicts for windows with
+    ``cnt ≥ 2`` joined back on ``(window, salt)`` so even a
     10^8-occurrence boilerplate window spreads over ``n_salts`` tasks.
     Unique windows (the vast majority of the corpus) drop out BEFORE the
     join-back — the inner join moves only duplicated-window occurrences.
     Then the covered-position explode (fan-out min_len) reduces to one
     position-set array per document and the rebuild is in-row
-    (array_except + transform — :func:`_rebuild_from_covered`), the same
-    idiom as remove_duplicate_spans: no per-token explode or (doc,
-    position) shuffle anywhere in the tail.
+    (:func:`_rebuild`).
+
+    Unlike the k=8 tier, the occurrence rows are NOT repartitioned on
+    ``(__w, __salt)``: here that table is the RAW corpus-position
+    occurrence rows, not a small reduction, and pre-shuffling them forces
+    a sort-merge join-back where the planner's broadcast of the
+    (occupancy-slim) verdict table costs no probe shuffle at all
+    (measured on the 30× and planted-hot corpora: growth 4.4×→6.1× and
+    hot/plain 2.7×→4.6× when forced, nothing gained at sf1).  When the
+    verdict table outgrows the broadcast threshold the planner falls back
+    to a hash join on (__w, __salt) — salt-spread keys, skew-safe without
+    the bake-in.
 
     Returns one row per non-empty document:
     ``(doc_id, cleaned_text, n_tokens, n_removed_tokens)``.
     """
     _check_params(min_len, n_salts, name="min_len")
     L = int(min_len)
-    toks = (
-        _spread_for_explode(
-            docs.select(doc_id, text_col), F.col(doc_id),
-            expansion=_SPAN_EXPANSION,
-        )
-        .select(doc_id, _norm_tokens(text_col).alias("__t"))
-        .where(F.length(F.trim(F.col(text_col))) > 0)
+    toks = _tokens(docs, doc_id, text_col)
+    occ = _with_salt(_windows(toks, doc_id, L), n_salts, doc_id, "__i")
+    marked = occ.join(
+        _dup_verdicts(occ, doc_id, survivor=True), ["__w", "__salt"]
     )
-    occ = toks.where(F.size("__t") >= L).select(
-        doc_id,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size(__t) - {L - 1}),"
-                f" i -> xxhash64(slice(__t, i, {L})))"
-            )
-        ).alias("__p0", "__w"),
-    ).select(doc_id, (F.col("__p0") + 1).alias("__i"), "__w")
-    # NO explicit (__w, __salt) repartition here, unlike the k=8 tier:
-    # there the repartitioned table is the one-row-per-(window, doc)
-    # REDUCTION (small, and cached in the suite), so pre-distributing it
-    # for both consumers wins at every tier. Here the equivalent table
-    # is the RAW corpus-position occurrence rows — pre-shuffling those
-    # forces a sort-merge join-back where the planner's broadcast of the
-    # (occupancy-slim) verdict table costs no probe shuffle at all;
-    # measured on the 30× and planted-hot corpora the forced shuffle
-    # regressed growth 4.4×→6.1× and hot/plain 2.7×→4.6× while buying
-    # nothing at sf1. When the verdict table outgrows the broadcast
-    # threshold at cluster scale the planner falls back to a hash join
-    # on (__w, __salt) — salt-spread keys, bounded per task, skew-safe
-    # without the bake-in.
-    salted = _with_salt(occ, n_salts, doc_id, "__i")
-    verdicts = _explode_occupied_salts(
-        salted.groupBy("__w", "__salt")
-        .agg(
-            F.count(F.lit(1)).alias("__pc"),
-            F.min(F.struct(F.col(doc_id), F.col("__i"))).alias("__ps"),
-        )
-        .groupBy("__w")
-        .agg(
-            F.sum("__pc").alias("__cnt"),
-            F.min("__ps").alias("__surv"),
-            F.collect_list("__salt").alias("__occ"),
-        )
-        .where(F.col("__cnt") >= 2)
-        .select("__occ", "__w", "__surv")
-    )
-    # inner join: only occurrences of duplicated windows survive — unique
-    # windows never travel through the verdict join-back.
-    marked = salted.join(verdicts, ["__w", "__salt"], "inner")
     if keep_first:
         marked = marked.where(
             ~(
@@ -648,14 +541,4 @@ def exact_substring_dedup(
                 & (F.col("__surv")["__i"] == F.col("__i"))
             )
         )
-    covered = (
-        marked.select(
-            doc_id,
-            F.explode(
-                F.expr(f"sequence(__i, __i + {L - 1})")
-            ).alias("__j"),
-        )
-        .groupBy(doc_id)
-        .agg(F.collect_set("__j").alias("__cov"))
-    )
-    return _rebuild_from_covered(toks, covered, doc_id)
+    return _rebuild(toks, marked, doc_id, f"sequence(__i, __i + {L - 1})")

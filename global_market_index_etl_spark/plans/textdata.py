@@ -2571,7 +2571,7 @@ def ann_pq_rerank(spark, sf):
     "stage reuses the exact oracle fragment of its standalone query "
     "(_SQL_CLASSIFIER_CTES / _SQL_SPAN_REMOVAL_CTES), so the composition "
     "is checked by construction against the same arithmetic. Scale shape "
-    "= classifier (scan-speed codegen) + span shuffles (window-md5 keys) "
+    "= classifier (scan-speed codegen) + span shuffles (128-bit window keys) "
     "+ one fingerprint window + split projection.",
 )
 def curation_pipeline_v2(spark, sf):

@@ -165,70 +165,6 @@ def test_token_budget_tiny_budget_empty(spark, docs):
     assert out.count() == 0
 
 
-def test_repeated_spans_matches_duckdb_twin(spark, docs):
-    from global_market_index_etl_spark.operators.dedup import repeated_spans
-
-    span, stride = 10, 5
-    got = (
-        repeated_spans(docs, span=span, stride=stride, min_docs=2)
-        .orderBy("span_fp")
-        .toPandas()
-    )
-    want = duck_connection(SF_SMALL).execute(
-        f"""
-        WITH w AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS arr
-          FROM documents WHERE length(trim(text)) > 0
-        ), fps AS (
-          SELECT DISTINCT doc_id,
-                 unnest(list_transform(
-                   range(1, len(arr) - {span} + 2, {stride}),
-                   i -> md5(array_to_string(arr[i : i + {span} - 1], ' '))
-                 )) AS span_fp
-          FROM w WHERE len(arr) >= {span}
-        )
-        SELECT span_fp, CAST(count(*) AS BIGINT) AS n_docs,
-               min(doc_id) AS example_id
-        FROM fps GROUP BY 1 HAVING count(*) >= 2
-        ORDER BY span_fp
-        """
-    ).fetchdf()
-    assert len(got) > 0, "fixture corpus should contain repeated spans"
-    for col in ("span_fp", "n_docs", "example_id"):
-        assert got[col].tolist() == want[col].tolist(), col
-
-
-def test_docs_sharing_spans_planted(spark):
-    from global_market_index_etl_spark.operators.dedup import (
-        docs_sharing_spans,
-    )
-
-    para = " ".join(f"tok{i}" for i in range(20))
-    other = " ".join(f"alt{i}" for i in range(20))
-    rows = [
-        (1, para + " unique tail one two three four five six seven"),
-        (2, "intro words here " + para),
-        (3, other),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r.doc_id: r
-        for r in docs_sharing_spans(df, span=20, stride=1).collect()
-    }
-    # docs 1 and 2 both contain the 20-token paragraph as a window;
-    # doc 3 shares nothing
-    assert out[1].n_shared_spans >= 1 and out[2].n_shared_spans >= 1
-    assert out[3].n_shared_spans == 0 and out[3].shared_frac == 0.0
-    assert 0 < out[1].shared_frac <= 1.0
-    # a doc shorter than span emits no windows at all
-    tiny = spark.createDataFrame([(9, "just four small words")],
-                                 "doc_id long, text string")
-    from global_market_index_etl_spark.operators.dedup import (
-        span_fingerprints,
-    )
-    assert span_fingerprints(tiny, span=20).count() == 0
-
-
 def test_export_training_shards_deterministic(spark, docs, tmp_path):
     import glob
     import hashlib

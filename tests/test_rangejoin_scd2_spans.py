@@ -772,7 +772,9 @@ def test_planted_hot_window_exact_substring_survivor(spark):
 def test_planted_hot_window_salt_invariance(spark):
     from global_market_index_etl_spark.operators.spans import (
         duplicate_span_suite,
+        duplicate_window_profile,
         exact_substring_dedup,
+        remove_duplicate_spans,
     )
 
     k = 4
@@ -796,6 +798,18 @@ def test_planted_hot_window_salt_invariance(spark):
         duplicate_span_suite(df, k=k, n_salts=16, share_cache=False)
     )
     assert suite1 == suite16
+
+    removed1 = rows(
+        remove_duplicate_spans(df, k=k, n_salts=1, share_cache=False)
+    )
+    removed16 = rows(
+        remove_duplicate_spans(df, k=k, n_salts=16, share_cache=False)
+    )
+    assert removed1 == removed16
+
+    profile1 = rows(duplicate_window_profile(df, k=k, n_salts=1))
+    profile16 = rows(duplicate_window_profile(df, k=k, n_salts=16))
+    assert profile1 == profile16
 
 
 def test_planted_hot_window_profile_counts(spark):
