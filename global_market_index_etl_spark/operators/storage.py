@@ -42,10 +42,14 @@ single Postgres connection with explicit commit/rollback,
 postgres_writer.py:107-113; this is the MERGE-level OCC a full table
 format adds.)
 
-Cost scales with |touched buckets| ≍ |batch|, not |table| — the property
-that makes MERGE viable on a 100 TB table. All manifest/rename operations
-go through the Hadoop FileSystem API, so the same code runs on file:,
-hdfs:, and rename-atomic object stores.
+A merge reads and rewrites every bucket holding a batch key, whole: cost
+scales with |touched buckets| × bucket size, and untouched buckets are
+never read. That is sub-table only while a batch touches few buckets. Key
+hashing spreads even a small batch over all of them: a market tick of 480
+bars into 8 buckets touches all 8 and rewrites the whole quotes table,
+15.25 rows written per batch row in the ``market_ingest`` benchmark. All
+manifest/rename operations go through the Hadoop FileSystem API, so the
+same code runs on file:, hdfs:, and rename-atomic object stores.
 """
 
 from __future__ import annotations
@@ -54,6 +58,7 @@ import json
 import uuid
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -83,13 +88,11 @@ def _bucket_col(key_columns: list[str], n_buckets: int):
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _hpath(jvm, p: str):
-    return jvm.org.apache.hadoop.fs.Path(p)
+    """``(Path, fs)``: the Hadoop ``Path`` class and the FileSystem serving
+    ``path``. The class is resolved here once per call because every py4j
+    package step (``jvm.org.apache...``) is a gateway round trip."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path, Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def table_versions(spark: SparkSession, path: str) -> list[int]:
@@ -104,10 +107,10 @@ def table_versions(spark: SparkSession, path: str) -> list[int]:
     live table as absent and bootstrap over it (the round-7 advice defect in
     ``streaming/scd2_stream.py``: overwrite-bootstrap would have destroyed
     the maintained history on any transient listing error)."""
-    jvm, fs = _fs(spark, path)
-    if not fs.exists(_hpath(jvm, path)):  # provably absent — the only [] path
+    Path, fs = _fs(spark, path)
+    if not fs.exists(Path(path)):  # provably absent — the only [] path
         return []
-    statuses = fs.listStatus(_hpath(jvm, path))
+    statuses = fs.listStatus(Path(path))
     versions = []
     for st in statuses:
         name = st.getPath().getName()
@@ -134,8 +137,8 @@ def _read_manifest(spark: SparkSession, path: str, version: int | None = None):
             f"version {version} of table {path} is not available "
             f"(committed: {versions or 'none'}) — vacuumed or never written"
         )
-    jvm, fs = _fs(spark, path)
-    target = _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{version:010d}.json")
+    Path, fs = _fs(spark, path)
+    target = Path(f"{path}/{_MANIFEST_PREFIX}{version:010d}.json")
     stream = fs.open(target)
     try:
         raw = bytes(stream.readAllBytes())
@@ -165,36 +168,35 @@ def _commit_manifest(
     ``merge_into_parquet`` retries on (re-read, re-stage conflicting
     buckets, commit on top).
     """
-    jvm, fs = _fs(spark, path)
+    Path, fs = _fs(spark, path)
     tmp = f"{path}/.manifest-tmp-{uuid.uuid4().hex}"
-    out = fs.create(_hpath(jvm, tmp), True)
+    out = fs.create(Path(tmp), True)
     try:
         out.write(bytearray(json.dumps(manifest).encode("utf-8")))
     finally:
         out.close()
     final = f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"
     if fs.getUri().getScheme() == "file":
-        tmp_local = fs.makeQualified(_hpath(jvm, tmp)).toUri().getPath()
-        final_local = fs.makeQualified(_hpath(jvm, final)).toUri().getPath()
+        tmp_local = fs.makeQualified(Path(tmp)).toUri().getPath()
+        final_local = fs.makeQualified(Path(final)).toUri().getPath()
+        jvm = spark._jvm
         try:
             jvm.java.nio.file.Files.createLink(
                 jvm.java.io.File(final_local).toPath(),
                 jvm.java.io.File(tmp_local).toPath(),
             )
         except Exception as exc:
-            fs.delete(_hpath(jvm, tmp), False)
-            if fs.exists(_hpath(jvm, final)):
+            fs.delete(Path(tmp), False)
+            if fs.exists(Path(final)):
                 raise ManifestConflict(
                     f"manifest commit failed for {final} — another writer "
                     "committed this version first"
                 ) from exc
             raise  # genuine IO failure, not a version race
-        fs.delete(_hpath(jvm, tmp), False)
+        fs.delete(Path(tmp), False)
         return
-    if fs.exists(_hpath(jvm, final)) or not fs.rename(
-        _hpath(jvm, tmp), _hpath(jvm, final)
-    ):
-        fs.delete(_hpath(jvm, tmp), False)
+    if fs.exists(Path(final)) or not fs.rename(Path(tmp), Path(final)):
+        fs.delete(Path(tmp), False)
         raise ManifestConflict(
             f"manifest commit failed for {final} — another writer committed "
             "this version first"
@@ -204,9 +206,9 @@ def _commit_manifest(
 def _list_bucket_files(spark: SparkSession, path: str) -> dict[str, list[str]]:
     """Bucket → relative parquet paths from a directory listing (used once,
     when adopting a table written before the manifest protocol)."""
-    jvm, fs = _fs(spark, path)
+    Path, fs = _fs(spark, path)
     buckets: dict[str, list[str]] = {}
-    for st in fs.listStatus(_hpath(jvm, path)):
+    for st in fs.listStatus(Path(path)):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(BUCKET + "="):
             files = [
@@ -360,26 +362,26 @@ def _prune_manifest_files(
 
 
 def _move_staged_files(
-    jvm, fs, path: str, staging: str, commit_tag: str
+    Path, fs, path: str, staging: str, commit_tag: str
 ) -> dict[str, list[str]]:
     """Move staged bucket files into the live tree under commit-unique
     names (rename = metadata op, never overwrites). The ONE copy of the
     crash-sensitive move-in protocol, shared by MERGE and OPTIMIZE.
     Returns bucket value → sorted moved relative paths."""
     moved: dict[str, list[str]] = {}
-    for st in fs.listStatus(_hpath(jvm, staging)):
+    for st in fs.listStatus(Path(staging)):
         dirname = st.getPath().getName()
         if not dirname.startswith(BUCKET + "="):
             continue
         bval = dirname.split("=", 1)[1]
-        fs.mkdirs(_hpath(jvm, f"{path}/{dirname}"))
+        fs.mkdirs(Path(f"{path}/{dirname}"))
         rels = []
         for f in fs.listStatus(st.getPath()):
             fname = f.getPath().getName()
             if not fname.endswith(".parquet"):
                 continue
             rel = f"{dirname}/{commit_tag}-{fname}"
-            if not fs.rename(f.getPath(), _hpath(jvm, f"{path}/{rel}")):
+            if not fs.rename(f.getPath(), Path(f"{path}/{rel}")):
                 raise IOError(f"failed to move staged file into {path}/{rel}")
             rels.append(rel)
         moved[bval] = sorted(rels)
@@ -487,6 +489,12 @@ def merge_into_parquet(
     the manifest, so every later read resolves the column table-wide.
     Asserted in ``test_merge_additive_schema_evolution``.
 
+    ``updates`` is evaluated exactly once: it is persisted before the
+    bounded collect of its bucket values, and the staging write and every
+    OCC re-stage read that copy, which is unpersisted when the merge
+    returns or raises. A non-deterministic batch (a live fetch) is merged
+    as the rows that one evaluation produced.
+
     Reads only the live files of buckets containing updated keys and
     replaces only those buckets — untouched buckets' files are never read,
     moved, or rewritten. Idempotent: replaying the same batch leaves the
@@ -530,182 +538,191 @@ def merge_into_parquet(
         if manifest.get("n_buckets") is not None:
             n_buckets = int(manifest["n_buckets"])
     up = updates.withColumn(BUCKET, _bucket_col(key_columns, n_buckets))
-    # ≤ n_buckets scalar rows — bounded driver collect, independent of data size
-    affected = [r[0] for r in up.select(BUCKET).distinct().collect()]
-    if not affected:
-        return
-    if manifest is None:
-        # Adopt a pre-manifest table: its directory listing IS its live set.
-        # Commit the adoption manifest BEFORE any staging/moving so a crash
-        # mid-merge still leaves a committed pre-merge version readable
-        # (otherwise moved-but-uncommitted files would pollute the fallback
-        # directory-listing read).
-        manifest = {
-            "n_buckets": n_buckets,
-            "key_columns": list(key_columns),
-            "schema": up.schema.jsonValue(),
-            "buckets": _list_bucket_files(spark, path),
-        }
-        version = 1
-        try:
-            _commit_manifest(spark, path, version, manifest)
-        except ManifestConflict:
-            # a concurrent merge adopted the same legacy listing first —
-            # both adoption manifests describe the identical directory
-            # state, so the winner's is as good as ours: build on it
-            version, manifest = _read_manifest(spark, path)
-            if list(manifest.get("key_columns") or key_columns) != list(
-                key_columns
-            ):
-                raise ValueError(
-                    f"MERGE key mismatch for table {path}: concurrent "
-                    f"adoption used {manifest.get('key_columns')}, caller "
-                    f"passed {list(key_columns)}"
-                )
-    affected_set = {str(b) for b in affected}
-    bucket_vals = {str(b): b for b in affected}
-    jvm, fs = _fs(spark, path)
+    # The batch is evaluated ONCE: the `affected` collect below fills this
+    # cache, and the staging write and every OCC re-stage read it. A source
+    # evaluated twice could yield keys in buckets the first pass never saw;
+    # those buckets would be staged from the new rows alone and replace
+    # their live files.
+    up.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # ≤ n_buckets scalar rows — bounded driver collect, independent of data size
+        affected = [r[0] for r in up.select(BUCKET).distinct().collect()]
+        if not affected:
+            return
+        if manifest is None:
+            # Adopt a pre-manifest table: its directory listing IS its live set.
+            # Commit the adoption manifest BEFORE any staging/moving so a crash
+            # mid-merge still leaves a committed pre-merge version readable
+            # (otherwise moved-but-uncommitted files would pollute the fallback
+            # directory-listing read).
+            manifest = {
+                "n_buckets": n_buckets,
+                "key_columns": list(key_columns),
+                "schema": up.schema.jsonValue(),
+                "buckets": _list_bucket_files(spark, path),
+            }
+            version = 1
+            try:
+                _commit_manifest(spark, path, version, manifest)
+            except ManifestConflict:
+                # a concurrent merge adopted the same legacy listing first —
+                # both adoption manifests describe the identical directory
+                # state, so the winner's is as good as ours: build on it
+                version, manifest = _read_manifest(spark, path)
+                if list(manifest.get("key_columns") or key_columns) != list(
+                    key_columns
+                ):
+                    raise ValueError(
+                        f"MERGE key mismatch for table {path}: concurrent "
+                        f"adoption used {manifest.get('key_columns')}, caller "
+                        f"passed {list(key_columns)}"
+                    )
+        affected_set = {str(b) for b in affected}
+        bucket_vals = {str(b): b for b in affected}
+        Path, fs = _fs(spark, path)
 
-    def _stage_and_move(base_manifest: dict, buckets: set[str], tag_version: int):
-        """Merge ``buckets``' live files with the matching update rows,
-        stage OUTSIDE the live set, move in under commit-unique names
-        (rename = metadata op; never overwrites). Returns
-        (bucket → moved rel paths, staging dir)."""
-        # Schema pinned from the batch (same columns by contract): parquet
-        # columns resolve by NAME, the partition column fills from dir
-        # names, a still-empty table reads as zero rows instead of failing
-        # inference, and planning skips the footer sweep entirely.
-        current = _read_live_files(
-            spark, path, base_manifest, up.schema, buckets
-        )
-        subset = (
-            up
-            if buckets == affected_set
-            else up.filter(
-                F.col(BUCKET).isin([bucket_vals[b] for b in buckets])
+        def _stage_and_move(base_manifest: dict, buckets: set[str], tag_version: int):
+            """Merge ``buckets``' live files with the matching update rows,
+            stage OUTSIDE the live set, move in under commit-unique names
+            (rename = metadata op; never overwrites). Returns
+            (bucket → moved rel paths, staging dir)."""
+            # Schema pinned from the batch (same columns by contract): parquet
+            # columns resolve by NAME, the partition column fills from dir
+            # names, a still-empty table reads as zero rows instead of failing
+            # inference, and planning skips the footer sweep entirely.
+            current = _read_live_files(
+                spark, path, base_manifest, up.schema, buckets
             )
-        )
-        merged = upsert(current, subset, key_columns, order_column=order_column)
-        staging = f"{path}/.staging-{uuid.uuid4().hex}"
-        (
-            merged.repartition(len(buckets), F.col(BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET)
-            .parquet(staging)
-        )
-        if _crash_point == "after_stage":
-            raise RuntimeError("injected crash: staged files written, not moved")
-        commit_tag = f"c{tag_version:010d}-{uuid.uuid4().hex[:8]}"
-        moved_files = _move_staged_files(jvm, fs, path, staging, commit_tag)
-        if _crash_point == "after_move":
-            raise RuntimeError(
-                "injected crash: files moved, manifest not committed"
-            )
-        return moved_files, staging
-
-    # Optimistic-concurrency commit loop. Staged-and-moved files are
-    # invisible until a manifest references them, so losing the version
-    # race costs re-staging ONLY the buckets the winner changed — files
-    # for unconflicted buckets are reused as-is in the retried commit.
-    base_version, base_manifest = version, manifest
-    base_files = {b: manifest["buckets"].get(b, []) for b in affected_set}
-    buckets_to_write = set(affected_set)
-    my_files: dict[str, list[str]] = {}
-    stagings: list[str] = []
-    replaced: dict[str, list[str]] = {}
-    committed_version = None
-    _my_stats: dict[str, dict] = {}  # rel → stats, cached across retries
-    _my_stats_cols: list[str] | None = None
-    for _attempt in range(_MAX_COMMIT_ATTEMPTS):
-        if buckets_to_write:
-            moved_files, staging = _stage_and_move(
-                base_manifest, buckets_to_write, base_version + 1
-            )
-            stagings.append(staging)
-            # this attempt supersedes our own earlier files for these
-            # buckets (still unreferenced by any manifest — safe to drop)
-            for b in buckets_to_write:
-                for rel in my_files.get(b, []):
-                    fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-            my_files.update(moved_files)
-        if _race_hook is not None:
-            hook, _race_hook = _race_hook, None
-            hook()  # test-only: interleave a competing writer deterministically
-        replaced = {b: base_manifest["buckets"].get(b, []) for b in my_files}
-        merged_buckets = {**base_manifest["buckets"], **my_files}
-        new_manifest = {
-            "n_buckets": n_buckets,
-            "key_columns": list(key_columns),
-            "schema": up.schema.jsonValue(),
-            "buckets": merged_buckets,
-        }
-        # Data-skipping stats maintenance: a stats-tracked table keeps its
-        # per-file min/max across merges — replaced files drop out, moved-in
-        # files are footer-read (bounded by |staged files|, driver-side).
-        # Merge-staged files are unsorted, so their ranges are wide but
-        # CORRECT; periodic optimize_table with cluster_by restores tight
-        # pruning. The footer reads are CACHED across OCC retries: a retry
-        # re-stages only the conflicting buckets, so only its newly moved
-        # files are re-read (round-8 review fix).
-        stats_cols = base_manifest.get("stats_columns")
-        if stats_cols:
-            if _my_stats_cols != list(stats_cols):
-                _my_stats.clear()
-                _my_stats_cols = list(stats_cols)
-            mine = [f for files in my_files.values() for f in files]
-            missing = [f for f in mine if f not in _my_stats]
-            if missing:
-                _my_stats.update(
-                    _file_stats(path, missing, list(stats_cols))
+            subset = (
+                up
+                if buckets == affected_set
+                else up.filter(
+                    F.col(BUCKET).isin([bucket_vals[b] for b in buckets])
                 )
-            live = {f for files in merged_buckets.values() for f in files}
-            prior = base_manifest.get("stats", {})
-            new_manifest["stats_columns"] = list(stats_cols)
-            new_manifest["stats"] = {
-                **{r: s for r, s in prior.items() if r in live},
-                **{r: _my_stats[r] for r in mine if r in _my_stats},
-            }
-        try:
-            _commit_manifest(spark, path, base_version + 1, new_manifest)
-            committed_version = base_version + 1
-            break
-        except ManifestConflict:
-            base_version, base_manifest = _read_manifest(spark, path)
-            # conflicting bucket = winner changed its file set since our
-            # merge read it; our staged output no longer contains their rows
-            buckets_to_write = {
-                b
-                for b in affected_set
-                if base_manifest["buckets"].get(b, []) != base_files[b]
-            }
-            base_files = {
-                b: base_manifest["buckets"].get(b, []) for b in affected_set
-            }
-    if committed_version is None:
-        raise IOError(
-            f"merge into {path} lost the manifest race "
-            f"{_MAX_COMMIT_ATTEMPTS} times — giving up (orphaned staged "
-            "files are invisible; vacuum_table reclaims them)"
-        )
-    # Post-commit cleanup (best-effort; a crash here leaves garbage that is
-    # invisible to readers — vacuum_table reclaims it). With
-    # retain_versions > 1 the replaced files and prior manifest are KEPT:
-    # they are exactly what read_table(version=...) time travel reads, and
-    # vacuum_table(retain_versions=...) is the retention policy — and the
-    # retention concurrent writers need (an eager delete here can race a
-    # competing merge's in-flight read of the pre-commit file set).
-    for staging in stagings:
-        fs.delete(_hpath(jvm, staging), True)
-    if retain_versions <= 1:
-        for files in replaced.values():
-            for rel in files:
-                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-        prev = committed_version - 1
-        if prev > 0:
-            fs.delete(
-                _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{prev:010d}.json"),
-                False,
             )
+            merged = upsert(current, subset, key_columns, order_column=order_column)
+            staging = f"{path}/.staging-{uuid.uuid4().hex}"
+            (
+                merged.repartition(len(buckets), F.col(BUCKET))
+                .write.mode("overwrite")
+                .partitionBy(BUCKET)
+                .parquet(staging)
+            )
+            if _crash_point == "after_stage":
+                raise RuntimeError("injected crash: staged files written, not moved")
+            commit_tag = f"c{tag_version:010d}-{uuid.uuid4().hex[:8]}"
+            moved_files = _move_staged_files(Path, fs, path, staging, commit_tag)
+            if _crash_point == "after_move":
+                raise RuntimeError(
+                    "injected crash: files moved, manifest not committed"
+                )
+            return moved_files, staging
+
+        # Optimistic-concurrency commit loop. Staged-and-moved files are
+        # invisible until a manifest references them, so losing the version
+        # race costs re-staging ONLY the buckets the winner changed — files
+        # for unconflicted buckets are reused as-is in the retried commit.
+        base_version, base_manifest = version, manifest
+        base_files = {b: manifest["buckets"].get(b, []) for b in affected_set}
+        buckets_to_write = set(affected_set)
+        my_files: dict[str, list[str]] = {}
+        stagings: list[str] = []
+        replaced: dict[str, list[str]] = {}
+        committed_version = None
+        _my_stats: dict[str, dict] = {}  # rel → stats, cached across retries
+        _my_stats_cols: list[str] | None = None
+        for _attempt in range(_MAX_COMMIT_ATTEMPTS):
+            if buckets_to_write:
+                moved_files, staging = _stage_and_move(
+                    base_manifest, buckets_to_write, base_version + 1
+                )
+                stagings.append(staging)
+                # this attempt supersedes our own earlier files for these
+                # buckets (still unreferenced by any manifest — safe to drop)
+                for b in buckets_to_write:
+                    for rel in my_files.get(b, []):
+                        fs.delete(Path(f"{path}/{rel}"), False)
+                my_files.update(moved_files)
+            if _race_hook is not None:
+                hook, _race_hook = _race_hook, None
+                hook()  # test-only: interleave a competing writer deterministically
+            replaced = {b: base_manifest["buckets"].get(b, []) for b in my_files}
+            merged_buckets = {**base_manifest["buckets"], **my_files}
+            new_manifest = {
+                "n_buckets": n_buckets,
+                "key_columns": list(key_columns),
+                "schema": up.schema.jsonValue(),
+                "buckets": merged_buckets,
+            }
+            # Data-skipping stats maintenance: a stats-tracked table keeps its
+            # per-file min/max across merges — replaced files drop out, moved-in
+            # files are footer-read (bounded by |staged files|, driver-side).
+            # Merge-staged files are unsorted, so their ranges are wide but
+            # CORRECT; periodic optimize_table with cluster_by restores tight
+            # pruning. The footer reads are CACHED across OCC retries: a retry
+            # re-stages only the conflicting buckets, so only its newly moved
+            # files are re-read (round-8 review fix).
+            stats_cols = base_manifest.get("stats_columns")
+            if stats_cols:
+                if _my_stats_cols != list(stats_cols):
+                    _my_stats.clear()
+                    _my_stats_cols = list(stats_cols)
+                mine = [f for files in my_files.values() for f in files]
+                missing = [f for f in mine if f not in _my_stats]
+                if missing:
+                    _my_stats.update(
+                        _file_stats(path, missing, list(stats_cols))
+                    )
+                live = {f for files in merged_buckets.values() for f in files}
+                prior = base_manifest.get("stats", {})
+                new_manifest["stats_columns"] = list(stats_cols)
+                new_manifest["stats"] = {
+                    **{r: s for r, s in prior.items() if r in live},
+                    **{r: _my_stats[r] for r in mine if r in _my_stats},
+                }
+            try:
+                _commit_manifest(spark, path, base_version + 1, new_manifest)
+                committed_version = base_version + 1
+                break
+            except ManifestConflict:
+                base_version, base_manifest = _read_manifest(spark, path)
+                # conflicting bucket = winner changed its file set since our
+                # merge read it; our staged output no longer contains their rows
+                buckets_to_write = {
+                    b
+                    for b in affected_set
+                    if base_manifest["buckets"].get(b, []) != base_files[b]
+                }
+                base_files = {
+                    b: base_manifest["buckets"].get(b, []) for b in affected_set
+                }
+        if committed_version is None:
+            raise IOError(
+                f"merge into {path} lost the manifest race "
+                f"{_MAX_COMMIT_ATTEMPTS} times — giving up (orphaned staged "
+                "files are invisible; vacuum_table reclaims them)"
+            )
+        # Post-commit cleanup (best-effort; a crash here leaves garbage that is
+        # invisible to readers — vacuum_table reclaims it). With
+        # retain_versions > 1 the replaced files and prior manifest are KEPT:
+        # they are exactly what read_table(version=...) time travel reads, and
+        # vacuum_table(retain_versions=...) is the retention policy — and the
+        # retention concurrent writers need (an eager delete here can race a
+        # competing merge's in-flight read of the pre-commit file set).
+        for staging in stagings:
+            fs.delete(Path(staging), True)
+        if retain_versions <= 1:
+            for files in replaced.values():
+                for rel in files:
+                    fs.delete(Path(f"{path}/{rel}"), False)
+            prev = committed_version - 1
+            if prev > 0:
+                fs.delete(
+                    Path(f"{path}/{_MANIFEST_PREFIX}{prev:010d}.json"),
+                    False,
+                )
+    finally:
+        up.unpersist()
 
 
 def optimize_table(
@@ -811,9 +828,9 @@ def optimize_table(
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.partitionBy(BUCKET).parquet(staging)
 
-    jvm, fs = _fs(spark, path)
+    Path, fs = _fs(spark, path)
     commit_tag = f"o{version + 1:010d}-{uuid.uuid4().hex[:8]}"
-    moved = _move_staged_files(jvm, fs, path, staging, commit_tag)
+    moved = _move_staged_files(Path, fs, path, staging, commit_tag)
     # an empty staged bucket dir (possible when repartition left a bucket
     # with zero rows — cannot happen for non-empty targets, but be safe)
     for b in targets - set(moved):
@@ -874,7 +891,7 @@ def optimize_table(
         # the moved files ARE the data; never delete.
         try:
             vpath = f"{path}/{_MANIFEST_PREFIX}{version + 1:010d}.json"
-            if not fs.exists(_hpath(jvm, vpath)):
+            if not fs.exists(Path(vpath)):
                 committed = False
             else:
                 _, live_m = _read_manifest(spark, path, version + 1)
@@ -889,19 +906,19 @@ def optimize_table(
             try:
                 for files in moved.values():
                     for rel in files:
-                        fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-                fs.delete(_hpath(jvm, staging), True)
+                        fs.delete(Path(f"{path}/{rel}"), False)
+                fs.delete(Path(staging), True)
             except Exception:
                 pass  # never mask the commit failure with a cleanup failure
         raise
-    fs.delete(_hpath(jvm, staging), True)
+    fs.delete(Path(staging), True)
     if retain_versions <= 1:
         for b in targets:
             for rel in manifest["buckets"].get(b, []):
-                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
+                fs.delete(Path(f"{path}/{rel}"), False)
         if version > 0:
             fs.delete(
-                _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"),
+                Path(f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"),
                 False,
             )
     return len(targets)
@@ -929,10 +946,10 @@ def vacuum_table(
     for v in retained:
         _, manifest = _read_manifest(spark, path, v)
         live |= {f for files in manifest["buckets"].values() for f in files}
-    jvm, fs = _fs(spark, path)
+    Path, fs = _fs(spark, path)
     removed = 0
     keep_names = {f"{_MANIFEST_PREFIX}{v:010d}.json" for v in retained}
-    for st in fs.listStatus(_hpath(jvm, path)):
+    for st in fs.listStatus(Path(path)):
         name = st.getPath().getName()
         if name.startswith(".staging-") or name.startswith(".manifest-tmp-"):
             fs.delete(st.getPath(), True)

@@ -1101,16 +1101,18 @@ def fx_asof_rate_fill(spark, sf):
     "e1_pipeline_market_bars",
     None,  # consumes the Python DataSource — not reachable from DuckDB
     doc="E1 — the reference's whole ETL (main.py:9-141) as ONE lazy Spark "
-    "plan over the market_bars DataSource: per-ticker-partitioned scan → "
+    "plan over the market_bars DataSource: ticker-grouped scan → "
     "rename → UTC → broadcast indices join → coerce casts → broadcast FX "
     "join with identity-rate/null-propagation → 5× _usd projections → "
     "last-write-wins key dedup. The only wide exchange is the upsert key "
     "shuffle; pipeline invariants (idempotency, FK, identity conversion, "
     "null propagation) are asserted in tests/test_domain_pipeline.py. "
     "S1 (the reference's yfinance batch scan, yf_collector.py:11-99) is "
-    "this plan's source stage: a Spark 4 Python DataSource with one input "
-    "partition per ticker — 1000 tickers fetch as 1000 parallel tasks with "
-    "per-ticker retry isolation; HTTP stubbed with a seeded deterministic "
+    "this plan's source stage: a Spark 4 Python DataSource that deals the "
+    "tickers into min(|tickers|, task slots) input partitions — one wave "
+    "of tasks, so 1000 tickers on 1000 slots fetch as 1000 parallel tasks "
+    "— with per-ticker retry isolation inside each task; HTTP stubbed with "
+    "a seeded deterministic "
     "OHLCV walk (no network in this sandbox), while partition planning / "
     "options / schema / iterator protocol are real and asserted standalone "
     "in tests/test_market_source.py. Value-pinned: the full sf0.01 table must reproduce a sha256 fixture bit-for-bit (test_rows_only_queries_match_pinned_digest; reproducibility across disjoint parallelism verified before pinning).",

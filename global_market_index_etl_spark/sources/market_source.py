@@ -2,18 +2,23 @@
 DataSource (SURVEY.md §2.1: yf_collector.py:11-99 → "Python Data Source
 partitioned by ticker").
 
-The reference fetches all tickers in one driver-side ``yf.download`` call
-(yf_collector.py:50-59). The Spark-native design inverts that: one input
-partition PER TICKER, so a 1000-executor cluster fetches 1000 tickers
-concurrently and a slow/failed ticker retries as one task instead of
-poisoning the whole batch. Schema, column names, and types match the
-standardized long layout (SURVEY.md §1.3 RAW/QUOTES).
+The reference fetches all tickers in one batched ``yf.download`` call
+(yf_collector.py:50-59). The Spark-native form batches per task: the
+tickers are dealt round-robin into ``min(|tickers|, slots)`` input
+partitions, so the whole fetch runs in ONE wave of tasks on the cluster's
+task slots. ``read_market_bars`` sets ``slots`` to the session's default
+parallelism; a 1000-ticker read on 1000 slots still plans 1000 tasks, and
+``spark.read.format("market_bars")`` without a ``slots`` option keeps one
+partition per ticker. Retries, mid-stream buffering and ``on_error=skip``
+quarantine stay per ticker inside the task, so a slow or failing ticker
+never costs its group-mates their rows. Schema, column names, and types
+match the standardized long layout (SURVEY.md §1.3 RAW/QUOTES).
 
 The HTTP call itself is stubbed with a deterministic synthetic OHLCV walk
 (seeded LCG per ticker) because this container has no network — the
 partition planning, option handling, schema contract, and per-partition
-iterator protocol are the real, tested surface. Swap ``_synthetic_bars``
-for a ``yfinance``/HTTP fetch to go live; the task boundary is already
+iterator protocol are the real, tested surface. Swap ``_fetch`` for a
+``yfinance``/HTTP fetch to go live; the retry boundary is already
 per-ticker.
 """
 
@@ -32,11 +37,12 @@ DEFAULT_TICKERS = "^GSPC,^IXIC,^DJI,^FTSE,^GDAXI,^FCHI,^N225,^HSI,^AXJO,^BSESN"
 
 
 class TickerPartition(InputPartition):
-    """One fetch unit = one ticker (the reference's per-ticker thread pool,
-    promoted to a Spark task)."""
+    """One fetch task: a group of tickers fetched one after another, each
+    with its own retries (the reference's batched download, split over the
+    cluster's task slots)."""
 
-    def __init__(self, ticker: str):
-        self.ticker = ticker
+    def __init__(self, tickers: list[str]):
+        self.tickers = tickers
 
 
 class MarketBarsReader(DataSourceReader):
@@ -64,17 +70,26 @@ class MarketBarsReader(DataSourceReader):
         # < 0 ⇒ fail before the first bar; n ≥ 0 ⇒ fail after yielding n
         # bars (the partial-stream HTTP failure case)
         self.fail_after_bars = int(options.get("fail_after_bars", "-1"))
+        # task slots to spread the tickers over; absent ⇒ one per ticker
+        self.slots = int(options.get("slots", "0"))
 
     def partitions(self):
-        return [TickerPartition(t) for t in self.tickers]
+        n = len(self.tickers)
+        if self.slots > 0:
+            n = min(n, self.slots)
+        return [TickerPartition(self.tickers[i::n]) for i in range(n)]
 
     def read(self, partition: TickerPartition):
+        for t in partition.tickers:
+            yield from self._read_ticker(t)
+
+    def _read_ticker(self, t: str):
         """Per-ticker fetch with the reference's failure isolation, made
         task-local (yf_collector.py:61-99, currency_converter.py:71-105):
 
         - up to ``max_attempts`` in-task retries around the fetch — a
           transient error (timeout, 5xx) costs retries inside ONE task,
-          never a job restart, and never touches other tickers' tasks;
+          never a job restart, and never touches other tickers' rows;
         - a ticker still failing after the retries is handled per
           ``on_error``: ``raise`` (default — the task fails and Spark's
           own task-retry/blacklist machinery takes over) or ``skip``
@@ -87,7 +102,6 @@ class MarketBarsReader(DataSourceReader):
         network, so the retry/quarantine machinery is the real tested
         surface while the fetch itself stays the synthetic walk.
         """
-        t = partition.ticker
         attempts = 0
         while True:
             attempts += 1
@@ -103,7 +117,7 @@ class MarketBarsReader(DataSourceReader):
             except MarketFetchError as err:
                 if attempts >= self.max_attempts:
                     if self.on_error == "skip":
-                        return  # poison ticker quarantined: no rows
+                        return  # poison ticker quarantined: no rows of its own
                     raise RuntimeError(
                         f"ticker {t} failed after {attempts} attempts: "
                         f"{err}"
@@ -174,8 +188,10 @@ def register(spark) -> None:
 
 
 def read_market_bars(spark, **options):
-    """Convenience loader: returns the bars DataFrame, one partition/ticker."""
+    """Convenience loader: returns the bars DataFrame, read in one wave of
+    tasks — ``slots`` defaults to the session's default parallelism."""
     register(spark)
+    options.setdefault("slots", spark.sparkContext.defaultParallelism)
     reader = spark.read.format("market_bars")
     for k, v in options.items():
         reader = reader.option(k, str(v))

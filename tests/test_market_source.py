@@ -6,12 +6,14 @@ import pyspark.sql.functions as F
 
 from global_market_index_etl_spark.sources.market_source import (
     DEFAULT_TICKERS,
+    MarketBarsReader,
     quarantine_report,
     read_market_bars,
 )
 
 
 def test_one_partition_per_ticker(spark):
+    """Fewer tickers than task slots (3 ≤ 8): each ticker is its own task."""
     df = read_market_bars(spark, tickers="^GSPC,^FTSE,^N225", bars=8)
     assert df.rdd.getNumPartitions() == 3
     per_part = df.withColumn("pid", F.spark_partition_id())
@@ -24,6 +26,49 @@ def test_one_partition_per_ticker(spark):
     # each ticker lives wholly in one partition (per-ticker fetch isolation)
     assert len(counts) == 3
     assert all(n == 8 for n in counts.values())
+
+
+def test_tickers_grouped_into_one_wave_of_tasks(spark):
+    """More tickers than task slots: the 10 default tickers are dealt into
+    min(10, 8) partitions on the local[8] session — one wave of tasks —
+    and each ticker still lives wholly in one partition."""
+    assert spark.sparkContext.defaultParallelism == 8
+    df = read_market_bars(spark, bars=48)
+    assert df.rdd.getNumPartitions() == 8
+    per_ticker = {
+        r.ticker: r
+        for r in df.withColumn("pid", F.spark_partition_id())
+        .groupBy("ticker")
+        .agg(
+            F.countDistinct("pid").alias("parts"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+    assert sorted(per_ticker) == sorted(DEFAULT_TICKERS.split(","))
+    assert all(r.parts == 1 and r.n == 48 for r in per_ticker.values())
+    assert sum(r.n for r in per_ticker.values()) == 480
+    # without a slot count (plain spark.read.format) one task per ticker
+    assert len(MarketBarsReader({}).partitions()) == 10
+
+
+def test_poison_ticker_skipped_within_shared_partition(spark):
+    """on_error=skip inside a grouped task drops the poison ticker's rows
+    only; the healthy ticker fetched in the same task keeps all of its."""
+    tickers = [f"T{i}" for i in range(8)] + ["BAD"]
+    opts = dict(
+        tickers=",".join(tickers),
+        bars=4,
+        fail_tickers="BAD",
+        fail_attempts=99,
+        on_error="skip",
+    )
+    groups = MarketBarsReader(
+        {**{k: str(v) for k, v in opts.items()}, "slots": "8"}
+    ).partitions()
+    assert ["T0", "BAD"] in [g.tickers for g in groups]
+    got = read_market_bars(spark, **opts).groupBy("ticker").count().collect()
+    assert {r.ticker: r["count"] for r in got} == {f"T{i}": 4 for i in range(8)}
 
 
 def test_deterministic_across_reads(spark):

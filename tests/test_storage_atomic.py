@@ -19,6 +19,7 @@ import pytest
 from global_market_index_etl_spark.operators.storage import (
     merge_into_parquet,
     read_table,
+    table_versions,
     vacuum_table,
     write_bucketed_table,
 )
@@ -43,6 +44,10 @@ def _snapshot(spark, path):
     }
 
 
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.mark.parametrize("crash_point", ["after_stage", "after_move"])
 def test_merge_crash_leaves_premerge_table_intact(
     spark, tmp_path, crash_point
@@ -53,6 +58,7 @@ def test_merge_crash_leaves_premerge_table_intact(
     target, updates = _orders_fixture(spark)
     write_bucketed_table(target, path, ["o_orderkey"], n_buckets=8)
     before = _snapshot(spark, path)
+    persisted = _persisted_rdds(spark)
 
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_into_parquet(
@@ -63,6 +69,8 @@ def test_merge_crash_leaves_premerge_table_intact(
             n_buckets=8,
             _crash_point=crash_point,
         )
+    # the crashed merge released its persisted copy of the batch
+    assert _persisted_rdds(spark) == persisted
 
     # The crashed merge's files (staged, or moved-but-uncommitted) are
     # invisible: readers see the pre-merge version bit-for-bit.
@@ -186,11 +194,9 @@ def test_concurrent_adoption_occ(spark, tmp_path, monkeypatch):
     target, updates = _orders_fixture(spark)
     write_bucketed_table(target, path, ["o_orderkey"], n_buckets=8)
     # strip the manifest → legacy directory-listing table
-    jvm, fs = S._fs(spark, path)
+    Path, fs = S._fs(spark, path)
     for v in S.table_versions(spark, path):
-        fs.delete(
-            S._hpath(jvm, f"{path}/{S._MANIFEST_PREFIX}{v:010d}.json"), False
-        )
+        fs.delete(Path(f"{path}/{S._MANIFEST_PREFIX}{v:010d}.json"), False)
     assert S.table_versions(spark, path) == []
 
     orig_listing = S._list_bucket_files
@@ -484,9 +490,70 @@ def test_empty_initial_table_merge_roundtrip(spark, tmp_path):
     schema = write_bucketed_table(empty, path, ["o_orderkey"], n_buckets=8)
     assert read_table(spark, path).count() == 0
     assert read_table(spark, path, schema).count() == 0
+    persisted = _persisted_rdds(spark)
+    # an empty batch touches no bucket: the early return commits nothing
+    merge_into_parquet(spark, path, empty, ["o_orderkey"], n_buckets=8)
+    assert _persisted_rdds(spark) == persisted
+    assert table_versions(spark, path) == [1]
     batch = target.limit(50)
     merge_into_parquet(spark, path, batch, ["o_orderkey"], n_buckets=8)
     assert read_table(spark, path).count() == 50
+    assert _persisted_rdds(spark) == persisted
+
+
+def test_merge_evaluates_a_changing_batch_once(spark, tmp_path):
+    """A batch whose re-evaluation yields more keys (a live fetch that
+    gains a bar) must be merged as ONE evaluation's rows. Evaluated twice,
+    the second pass's new keys land in buckets the first pass never saw:
+    those buckets were staged from the new rows alone and replaced their
+    live files, silently dropping the base rows stored there."""
+    import pandas as pd
+
+    path = str(tmp_path / "tbl")
+    base = spark.range(64).select(
+        F.col("id").alias("k"), F.lit("base").alias("v")
+    )
+    write_bucketed_table(base, path, ["k"], n_buckets=8)
+    bucket_of = {
+        r.id: r.b
+        for r in spark.range(128)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(8)).alias("b"))
+        .collect()
+    }
+    # A: two base keys of one bucket; B: one new key in every OTHER bucket
+    a_bucket = bucket_of[0]
+    a_keys = [k for k in range(64) if bucket_of[k] == a_bucket][:2]
+    first_new = {}
+    for k in range(64, 128):
+        first_new.setdefault(bucket_of[k], k)
+    b_keys = [k for b, k in first_new.items() if b != a_bucket]
+    assert len(b_keys) == 7
+    counter = str(tmp_path / "evaluations")
+    with open(counter, "w") as fh:
+        fh.write("0")
+
+    def fetch(batches):
+        for _ in batches:
+            pass
+        with open(counter) as fh:
+            n = int(fh.read()) + 1
+        with open(counter, "w") as fh:
+            fh.write(str(n))
+        keys = a_keys if n == 1 else a_keys + b_keys
+        yield pd.DataFrame({"k": keys, "v": [f"eval{n}"] * len(keys)})
+
+    batch = spark.range(1, numPartitions=1).mapInPandas(fetch, "k long, v string")
+    persisted = _persisted_rdds(spark)
+    merge_into_parquet(spark, path, batch, ["k"], n_buckets=8)
+
+    got = {r.k: r.v for r in read_table(spark, path).collect()}
+    # every base row survives, and the table is last-write-wins over the
+    # one evaluation the merge saw
+    assert len(set(range(64)) & set(got)) == 64
+    assert got == {k: ("eval1" if k in a_keys else "base") for k in range(64)}
+    with open(counter) as fh:
+        assert int(fh.read()) == 1
+    assert _persisted_rdds(spark) == persisted
 
 
 def test_time_travel_reads_prior_versions(spark, tmp_path):
@@ -700,8 +767,8 @@ def test_table_versions_absent_vs_listing_failure(spark, tmp_path, monkeypatch):
             raise IOError("transient listing failure")
 
     def flaky(spark_, path_):
-        jvm, fs = real_fs(spark_, path_)
-        return jvm, _FlakyFS(fs)
+        Path, fs = real_fs(spark_, path_)
+        return Path, _FlakyFS(fs)
 
     monkeypatch.setattr(st, "_fs", flaky)
     with pytest.raises(IOError):
