@@ -25,33 +25,6 @@ def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     )
 
 
-def key_ranges(
-    df: DataFrame, key: str, ts_column: str = "timestamp_utc"
-) -> DataFrame:
-    """A3 — per-key min/max of the time column + row count (the notebook's
-    data-range probe, 01_data_exploration.ipynb)."""
-    return df.groupBy(key).agg(
-        F.min(ts_column).alias("min_ts"),
-        F.max(ts_column).alias("max_ts"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def distinct_values(df: DataFrame, column: str) -> DataFrame:
-    """A4 — unique-value scan of one column (standardizer.py:304-312)."""
-    return df.select(column).distinct()
-
-
-def missing_rate_report(df: DataFrame, rate_column: str = "exchange_rate") -> DataFrame:
-    """F6/A1 — rows lacking an FX rate, per currency
-    (currency_converter.py:170-174) — the accounting the reference logs."""
-    return (
-        df.filter(F.col(rate_column).isNull())
-        .groupBy("original_currency")
-        .agg(F.count(F.lit(1)).alias("missing_rows"))
-    )
-
-
 def cap_per_group(
     df: DataFrame,
     group_col: str,

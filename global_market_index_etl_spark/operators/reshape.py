@@ -10,7 +10,6 @@ that multiplies rows within a partition.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
@@ -29,22 +28,3 @@ def unpivot(
     """
     return df.unpivot(id_columns, value_columns, variable_name, value_name)
 
-
-def pivot_wide(
-    df: DataFrame,
-    key_columns: list[str],
-    variable_column: str,
-    value_column: str,
-    variable_values: list[str],
-) -> DataFrame:
-    """Long → wide companion (no reference counterpart; completes the pair).
-
-    ``variable_values`` must be supplied explicitly: an unconstrained pivot
-    needs an extra distinct-scan job to discover values, which at 100 TB is a
-    full pass over the data — always pin the domain when it is known.
-    """
-    return (
-        df.groupBy(*key_columns)
-        .pivot(variable_column, variable_values)
-        .agg(F.first(value_column))
-    )

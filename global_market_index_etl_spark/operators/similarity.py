@@ -1,13 +1,32 @@
 """Similarity search over embedding columns (driver north star).
 
-Two tiers:
-- ``cosine_topk`` — exact brute force: probes × corpus with higher-order
-  array functions (zip_with/aggregate — JVM codegen, no Python). Correctness
-  baseline; cost O(|probes|·|corpus|·dim). Fine for ≤ ~10^4 probes against
-  ~10^7 vectors per batch on a cluster; beyond that, bucket first.
-- ``lsh_cosine_topk`` — random-hyperplane LSH: sign-bit signatures bucket
-  the corpus, probes only score their own bucket(s). Recall is tunable via
-  bits/tables; candidate scoring reuses the exact kernel, so precision is 1.
+Every operator here is candidate generation followed by one shared
+scoring and ranking kernel. Only the candidate generator differs per
+strategy:
+
+- brute force (``cosine_topk``, ``embedding_neardup_pairs``): a non-equi
+  join, every probe against every corpus vector — the correctness
+  baseline, O(|probes|·|corpus|·dim);
+- sign-bit LSH (``lsh_cosine_topk``, ``embedding_neardup_pairs_lsh``,
+  ``incremental_embedding_neardup_pairs``): a pair is a candidate iff it
+  shares a ``(table, signature)`` bucket in any of ``tables`` tables;
+- IVF (``ivf_cosine_topk``, ``ivf_search_index``): a probe meets the
+  corpus rows of its ``nprobe`` nearest-centroid lists, in memory or read
+  from a persisted, list-partitioned index;
+- IVF with quantized candidates (``ivf_sq8_topk``, ``ivf_pq_topk``,
+  ``ivf_search_index(rerank=)``): the list join ranks by a quantized
+  similarity (int8 codes or PQ asymmetric distances) and keeps ``rerank``
+  rows per query for the exact stage;
+- clusters (``semantic_dedup``): pairs within one k-means cluster.
+
+The kernel, each piece defined once below: ``_side`` is the only
+``(id, vector, norm)`` projection (norms attach per row below the join,
+so each vector's self-dot runs once, not once per pair); ``_cos`` is the
+only cosine expression; ``_score`` rounds it; ``_topk`` is the only
+per-query ranking (score desc, id asc), serving both every final top-k
+and the quantized R-cut; ``_quantized_topk`` is the only quantized
+candidate → exact re-rank path, to which each quantizer contributes only
+its code columns and its ``q_sim`` (``_sq8_probe``, ``_pq_probe``).
 
 Hyperplanes are generated driver-side from a seeded LCG (deterministic,
 cluster-reproducible) and shipped as literal arrays — dimension-bounded, so
@@ -23,6 +42,10 @@ from pyspark.sql import Column, DataFrame, Window
 
 from .util import parallelize_small
 
+# id column of each side role: probe/corpus for top-k, the two ends of a
+# pair, and "" for a side that is retagged into both ends of a self-join
+_ID = {"q": "query_id", "c": "neighbor_id", "1": "id_1", "2": "id_2", "": "__id"}
+
 
 def _dot(a: str, b: str) -> Column:
     """Exact double dot product of two array<float> columns, JVM-side."""
@@ -32,9 +55,67 @@ def _dot(a: str, b: str) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Attach the squared L2 norm (computed once per vector, reused per pair)."""
-    return df.withColumn("norm_sq", _dot(vec_col, vec_col))
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, tag: str, *keep, spread: bool = False
+) -> DataFrame:
+    """The one ``(id, vector, norm)`` projection: ``(_ID[tag], __v{tag},
+    *keep, __n{tag})``. ``spread`` runs ``parallelize_small`` on the
+    projection before the norm. The norm is attached per ROW below the
+    join boundary (the Join node stops CollapseProject from inlining it
+    into the per-pair expression), so it is computed once per vector."""
+    side = df.select(
+        F.col(id_col).alias(_ID[tag]), F.col(vec_col).alias(f"__v{tag}"), *keep
+    )
+    if spread:
+        side = parallelize_small(side)
+    return side.withColumn(f"__n{tag}", F.sqrt(_dot(f"__v{tag}", f"__v{tag}")))
+
+
+def _retag(side: DataFrame, tag: str, *keep) -> DataFrame:
+    """An untagged side (``__id, __v, __n``) renamed to pair end ``tag`` —
+    both ends of a self-join read the one side, signed or clustered once."""
+    return side.select(
+        F.col("__id").alias(_ID[tag]),
+        F.col("__v").alias(f"__v{tag}"),
+        F.col("__n").alias(f"__n{tag}"),
+        *keep,
+    )
+
+
+def _cos(a: str, b: str) -> Column:
+    """The one exact cosine: dot product over the product of the per-row
+    norms (sqrt per side, multiplied), between sides ``a`` and ``b``."""
+    return _dot(f"__v{a}", f"__v{b}") / (F.col(f"__n{a}") * F.col(f"__n{b}"))
+
+
+def _score(pairs: DataFrame, a: str, b: str, round_digits: int) -> DataFrame:
+    """``(id_a, id_b, cos_sim)`` with the cosine rounded — rounding before
+    ranking or thresholding makes results deterministic and portable."""
+    return pairs.select(
+        _ID[a], _ID[b], F.round(_cos(a, b), round_digits).alias("cos_sim")
+    )
+
+
+def _near_pairs(
+    pairs: DataFrame, threshold: float, round_digits: int
+) -> DataFrame:
+    """Verified near-duplicate pairs: rounded cosine ≥ ``threshold``."""
+    return _score(pairs, "1", "2", round_digits).filter(
+        F.col("cos_sim") >= threshold
+    )
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """The one per-query ranking: ``row_number`` over (``score`` desc,
+    neighbor id asc), first ``k`` rows per query."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", score, "rn")
+    )
 
 
 def cosine_topk(
@@ -52,35 +133,15 @@ def cosine_topk(
     are rounded before ranking with an id tie-break, making the top-k set
     deterministic and engine-portable.
 
-    Norms are attached per ROW below the join boundary (the Join node stops
-    CollapseProject from inlining them into the per-pair expression), so each
-    vector's self-dot-product is computed once, not once per pair — the pair
-    loop does exactly one dim-length dot product. Same arithmetic
+    Norms are attached per ROW below the join boundary (``_side``), so
+    each vector's self-dot product is computed once, not once per pair —
+    the pair loop does exactly one dim-length dot product. Same arithmetic
     (sqrt per side, multiplied), so values are bit-identical.
     """
-    p = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-    c = parallelize_small(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-        )
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
+    p = _side(probes, id_col, vec_col, "q")
+    c = _side(corpus, id_col, vec_col, "c", spread=True)
     pairs = c.join(F.broadcast(p), F.col("neighbor_id") != F.col("query_id"))
-    cos = _dot("__q_vec", "__c_vec") / (F.col("__q_norm") * F.col("__c_norm"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cos, round_digits).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    return _exact_topk(pairs, k, round_digits)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
@@ -96,32 +157,6 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
         return total - 2.0
 
     return [[nxt() for _ in range(dim)] for _ in range(bits)]
-
-
-def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: bit i = 1 iff vec · plane_i > 0 (packed to long).
-
-    Pure-expression form, kept for single-table/low-bit uses. For the
-    multi-table path this is the wrong tool: tables×bits plane dots per row
-    as interpreted higher-order lambdas cost ~dim×tables×bits lambda calls
-    per row (measured 18 s at sf0.1 vs 2 s brute force) — use
-    ``_lsh_signatures_batch`` (one Arrow-batched numpy matmul) instead.
-    """
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                lit_plane,
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseXOR(F.shiftleft(bit, i))
-    return sig
 
 
 def _rademacher_planes(
@@ -206,6 +241,14 @@ def _lsh_signatures_batch(
     return sigs
 
 
+def _signed(df: DataFrame, vec: str, sig_udf, *cols) -> DataFrame:
+    """One row per (vector, table): ``cols`` (default: every column of
+    ``df``) plus ``__tbl``/``__sig`` from one ``sig_udf`` call per row."""
+    return df.withColumn("__sigs", sig_udf(F.col(vec))).select(
+        *(cols or df.columns), F.posexplode("__sigs").alias("__tbl", "__sig")
+    )
+
+
 def lsh_cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -233,53 +276,25 @@ def lsh_cosine_topk(
     Σ_table |probes|×bucket_size; tune (bits↑, tables↑) together to hold
     recall while shrinking buckets.
     """
-    c_base = parallelize_small(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-        )
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-    p_base = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
     # one signature per table from a single Arrow-batched matmul, exploded
     # so the equi-join key is (table index, signature) — a single join
     # handles all tables at once
     sig_udf = _lsh_signatures_batch(dim, bits, tables, seed, family)
-
-    def signed(df, vec):
-        with_sigs = df.withColumn("__sigs", sig_udf(F.col(vec)))
-        return with_sigs.select(
-            *df.columns,
-            F.posexplode("__sigs").alias("__tbl", "__sig"),
-        )
-
-    c = signed(c_base, "__c_vec")
-    p = signed(p_base, "__q_vec")
+    c = _signed(_side(corpus, id_col, vec_col, "c", spread=True), "__vc", sig_udf)
+    p = _signed(_side(probes, id_col, vec_col, "q"), "__vq", sig_udf)
     # Score BEFORE deduplicating: a pair colliding in several tables would
     # otherwise drag both 64-float vectors (~550 B/row) through the dedup
     # shuffle; scoring first reduces each pair to three scalars (~25 B),
     # and the cosine is deterministic so the dedup keeps an identical
     # value whichever copy survives. (Redundant dot products for multi-
     # table collisions cost far less than shuffling vectors.)
-    cos = _dot("__q_vec", "__c_vec") / (F.col("__q_norm") * F.col("__c_norm"))
-    scored = (
-        c.join(F.broadcast(p), on=["__tbl", "__sig"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos, round_digits).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
+    pairs = c.join(F.broadcast(p), on=["__tbl", "__sig"]).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+    scored = _score(pairs, "q", "c", round_digits).dropDuplicates(
+        ["query_id", "neighbor_id"]
     )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    return _topk(scored, k)
 
 
 def _centroid_assign_batch(centroids: "np.ndarray", nprobe: int):
@@ -300,6 +315,56 @@ def _centroid_assign_batch(centroids: "np.ndarray", nprobe: int):
         return pd.Series(list(top))
 
     return assign
+
+
+def _probe_lists(p: DataFrame, centroids: "np.ndarray", nprobe: int) -> DataFrame:
+    """A probe side exploded to its ``nprobe`` nearest lists: one row per
+    (probe, list)."""
+    assign = _centroid_assign_batch(centroids, min(nprobe, len(centroids)))
+    return p.withColumn("__list", F.explode(assign(F.col("__vq"))))
+
+
+def _ivf_sides(
+    corpus: DataFrame,
+    probes: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_lists: int,
+    nprobe: int,
+    iterations: int = 2,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """In-memory IVF candidate generation: train the centroids, put every
+    corpus vector in its ONE nearest list, and explode every probe to its
+    ``nprobe`` nearest. Returns the listed corpus side, the probe side and
+    the listed probe side."""
+    centroids = _ivf_train_centroids(
+        corpus, id_col, vec_col, n_lists, iterations=iterations
+    )
+    assign_one = _centroid_assign_batch(centroids, 1)
+    c = _side(corpus, id_col, vec_col, "c", spread=True).withColumn(
+        "__list", assign_one(F.col("__vc"))[0]
+    )
+    p = _side(probes, id_col, vec_col, "q")
+    return c, p, _probe_lists(p, centroids, nprobe)
+
+
+def _list_pairs(c: DataFrame, p: DataFrame) -> DataFrame:
+    """IVF candidates: each listed probe row meets the corpus rows of its
+    list (probe side broadcast).
+
+    No dedup needed: every corpus vector lives in exactly ONE list and a
+    probe visits each of its nprobe lists once, so (query, neighbor)
+    pairs are already unique — a dropDuplicates here would shuffle every
+    candidate with both embedded vectors for nothing (measured 176 s →
+    19.7 s at 2000 probes × 100 k corpus when removed)."""
+    return c.join(F.broadcast(p), "__list").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+
+
+def _exact_topk(pairs: DataFrame, k: int, round_digits: int) -> DataFrame:
+    """Exact cosine top-k of probe × corpus candidate pairs."""
+    return _topk(_score(pairs, "q", "c", round_digits), k)
 
 
 def ivf_cosine_topk(
@@ -329,50 +394,10 @@ def ivf_cosine_topk(
     reads only its lists' partitions; centroid assignment is one
     Arrow-batched matmul per side.
     """
-    centroids = _ivf_train_centroids(
-        corpus, id_col, vec_col, n_lists, iterations=train_iterations
+    c, _, p_listed = _ivf_sides(
+        corpus, probes, id_col, vec_col, n_lists, nprobe, train_iterations
     )
-    n_lists_eff = len(centroids)
-    nprobe = min(nprobe, n_lists_eff)
-
-    c = parallelize_small(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-        )
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-    p = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-
-    assign_one = _centroid_assign_batch(centroids, 1)
-    assign_probe = _centroid_assign_batch(centroids, nprobe)
-    c_listed = c.withColumn("__list", assign_one(F.col("__c_vec"))[0])
-    p_listed = p.withColumn(
-        "__list", F.explode(assign_probe(F.col("__q_vec")))
-    )
-    # No dedup needed: every corpus vector lives in exactly ONE list and a
-    # probe visits each of its nprobe lists once, so (query, neighbor)
-    # pairs are already unique — a dropDuplicates here would shuffle every
-    # candidate with both embedded vectors for nothing (measured 176 s →
-    # 19.7 s at 2000 probes × 100 k corpus when removed).
-    cos = _dot("__q_vec", "__c_vec") / (F.col("__q_norm") * F.col("__c_norm"))
-    scored = (
-        c_listed.join(F.broadcast(p_listed), on="__list")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos, round_digits).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    return _exact_topk(_list_pairs(c, p_listed), k, round_digits)
 
 
 def auto_lsh_params(
@@ -476,33 +501,12 @@ def embedding_neardup_pairs_lsh(
         bits = auto_bits if bits is None else bits
         tables = auto_tables if tables is None else tables
     sig_udf = _lsh_signatures_batch(dim, bits, tables, seed)
-    base = parallelize_small(
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    ).withColumn("__n", F.sqrt(_dot("__v", "__v")))
-    signed = base.withColumn("__sigs", sig_udf(F.col("__v"))).select(
-        "__id", "__v", "__n", F.posexplode("__sigs").alias("__tbl", "__sig")
-    )
-    a = signed.select(
-        F.col("__id").alias("id_1"),
-        F.col("__v").alias("__v1"),
-        F.col("__n").alias("__n1"),
-        "__tbl",
-        "__sig",
-    )
-    b = signed.select(
-        F.col("__id").alias("id_2"),
-        F.col("__v").alias("__v2"),
-        F.col("__n").alias("__n2"),
-        "__tbl",
-        "__sig",
-    )
-    cos = _dot("__v1", "__v2") / (F.col("__n1") * F.col("__n2"))
-    return (
-        a.join(b, on=["__tbl", "__sig"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2", F.round(cos, round_digits).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .dropDuplicates(["id_1", "id_2"])
+    signed = _signed(_side(df, id_col, vec_col, "", spread=True), "__v", sig_udf)
+    a = _retag(signed, "1", "__tbl", "__sig")
+    b = _retag(signed, "2", "__tbl", "__sig")
+    pairs = a.join(b, on=["__tbl", "__sig"]).filter(F.col("id_1") < F.col("id_2"))
+    return _near_pairs(pairs, threshold, round_digits).dropDuplicates(
+        ["id_1", "id_2"]
     )
 
 
@@ -528,10 +532,7 @@ def embedding_lsh_index(
     base = parallelize_small(
         df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     )
-    return base.withColumn("__sigs", sig_udf(F.col("__v"))).select(
-        F.col("__id").alias(id_col),
-        F.posexplode("__sigs").alias("__tbl", "__sig"),
-    )
+    return _signed(base, "__v", sig_udf, F.col("__id").alias(id_col))
 
 
 def incremental_embedding_neardup_pairs(
@@ -587,20 +588,10 @@ def incremental_embedding_neardup_pairs(
     all_vecs = corpus_vecs.select(F.col(id_col), F.col(vec_col)).unionByName(
         new_vecs.select(F.col(id_col), F.col(vec_col))
     )
-    v1 = all_vecs.select(
-        F.col(id_col).alias("id_1"), F.col(vec_col).alias("__v1")
-    ).withColumn("__n1", F.sqrt(_dot("__v1", "__v1")))
-    v2 = all_vecs.select(
-        F.col(id_col).alias("id_2"), F.col(vec_col).alias("__v2")
-    ).withColumn("__n2", F.sqrt(_dot("__v2", "__v2")))
-    cos = _dot("__v1", "__v2") / (F.col("__n1") * F.col("__n2"))
-    pairs = (
-        candidates.join(v1, "id_1")
-        .join(v2, "id_2")
-        .select("id_1", "id_2", F.round(cos, round_digits).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+    pairs = candidates.join(_side(all_vecs, id_col, vec_col, "1"), "id_1").join(
+        _side(all_vecs, id_col, vec_col, "2"), "id_2"
     )
-    return pairs, new_sigs
+    return _near_pairs(pairs, threshold, round_digits), new_sigs
 
 
 def embedding_neardup_pairs(
@@ -617,18 +608,10 @@ def embedding_neardup_pairs(
     ever run at oracle scale. Per-row norms attach below the join so each
     vector's self-dot computes once, not O(n) times.
     """
-    a = parallelize_small(
-        df.select(F.col(id_col).alias("id_1"), F.col(vec_col).alias("__v1"))
-    ).withColumn("__n1", F.sqrt(_dot("__v1", "__v1")))
-    b = df.select(F.col(id_col).alias("id_2"), F.col(vec_col).alias("__v2")).withColumn(
-        "__n2", F.sqrt(_dot("__v2", "__v2"))
-    )
+    a = _side(df, id_col, vec_col, "1", spread=True)
+    b = _side(df, id_col, vec_col, "2")
     pairs = a.join(b, F.col("id_1") < F.col("id_2"))
-    cos = _dot("__v1", "__v2") / (F.col("__n1") * F.col("__n2"))
-    return (
-        pairs.select("id_1", "id_2", F.round(cos, round_digits).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return _near_pairs(pairs, threshold, round_digits)
 
 
 # Driver-side training caps, independent of n_lists: the seed pool is at
@@ -882,138 +865,68 @@ def ivf_search_index(
             "corpus?) — rebuild with a non-empty corpus"
         )
     centroids = np.array([r.centroid for r in cent_rows], dtype=np.float64)
-    nprobe = min(nprobe, len(centroids))
-    assign_probe = _centroid_assign_batch(centroids, nprobe)
-    p_listed = (
-        probes.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-        )
-        .withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-        .withColumn("__list", F.explode(assign_probe(F.col("__q_vec"))))
-    )
+    p = _side(probes, id_col, vec_col, "q")
+    p_listed = _probe_lists(p, centroids, nprobe)
     probed_lists = sorted(
         {r[0] for r in p_listed.select("__list").collect()}
     )
     lists = spark.read.parquet(path + "/lists").filter(
         F.col("__list").isin(probed_lists)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
+    if rerank is None:
+        c_listed = _side(lists, id_col, vec_col, "c", "__list")
+        return _exact_topk(_list_pairs(c_listed, p_listed), k, round_digits)
 
-    if rerank is not None:
-        if "__cq" not in lists.columns and "__pqc" not in lists.columns:
+    if "__pqc" in lists.columns:
+        # PQ fast path: load the persisted codebooks (bounded m·ksub
+        # rows), candidate scan projects ONLY (__pqc, __pqn)
+        book_rows = (
+            spark.read.parquet(path + "/pq_codebooks")
+            .orderBy("subspace", "code")
+            .collect()
+        )
+        if not book_rows:
+            # an index built from an empty corpus writes zero
+            # codebook rows; fail with the story rather than a bare
+            # max()-of-empty ValueError (round-9 review fix)
             raise ValueError(
-                f"index at {path} was not built with quantize= — "
-                "rerank has no stored codes to scan"
+                f"index at {path} has no PQ codebooks (built from an "
+                "empty corpus?) — rebuild with a non-empty corpus or "
+                "search without rerank"
             )
-        c_full = lists.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__c_vec"),
-        ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-        p_full = probes.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-        ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-        if "__pqc" in lists.columns:
-            # PQ fast path: load the persisted codebooks (bounded m·ksub
-            # rows), candidate scan projects ONLY (__pqc, __pqn)
-            book_rows = (
-                spark.read.parquet(path + "/pq_codebooks")
-                .orderBy("subspace", "code")
-                .collect()
-            )
-            if not book_rows:
-                # an index built from an empty corpus writes zero
-                # codebook rows; fail with the story rather than a bare
-                # max()-of-empty ValueError (round-9 review fix)
-                raise ValueError(
-                    f"index at {path} has no PQ codebooks (built from an "
-                    "empty corpus?) — rebuild with a non-empty corpus or "
-                    "search without rerank"
-                )
-            m = 1 + max(r.subspace for r in book_rows)
-            ksub = 1 + max(r.code for r in book_rows)
-            dsub = len(book_rows[0].centroid)
-            books = np.empty((m, ksub, dsub), dtype=np.float64)
-            for r in book_rows:
-                books[r.subspace, r.code] = r.centroid
-            adc_table = _pq_adc_table_batch(books)
-            c_q = lists.select(
-                F.col(id_col).alias("neighbor_id"),
-                "__list",
-                F.expr("transform(__pqc, x -> cast(x as int))").alias(
-                    "__pqc"
-                ),
-                "__pqn",
-            )
-            p_q = p_listed.select(
-                "query_id",
-                "__list",
-                adc_table(F.col("__q_vec")).alias("__qtab"),
-                F.col("__q_norm").alias("__qn"),
-            )
-            adc_ip = F.expr(
-                f"aggregate(transform(__pqc,"
-                f" (c, j) -> element_at(__qtab, j * {int(ksub)} + c + 1)),"
-                f" cast(0 as double), (acc, v) -> acc + v)"
-            )
-            cands = (
-                c_q.join(F.broadcast(p_q), "__list")
-                .filter(F.col("neighbor_id") != F.col("query_id"))
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    F.round(
-                        adc_ip / (F.col("__qn") * F.col("__pqn")),
-                        round_digits,
-                    ).alias("q_sim"),
-                )
-            )
-            return _candidate_exact_rerank(
-                cands, c_full, p_full,
-                k=k, rerank=rerank, round_digits=round_digits,
-            )
+        m = 1 + max(r.subspace for r in book_rows)
+        ksub = 1 + max(r.code for r in book_rows)
+        dsub = len(book_rows[0].centroid)
+        books = np.empty((m, ksub, dsub), dtype=np.float64)
+        for r in book_rows:
+            books[r.subspace, r.code] = r.centroid
+        code, norm, cast = "__pqc", "__pqn", "int"
+        probe = _pq_probe(p_listed, books)
+    elif "__cq" in lists.columns:
         # SQ8 fast path: codes + norm only — the float vec_col never
         # appears in this scan's ReadSchema
-        c_q = lists.select(
-            F.col(id_col).alias("neighbor_id"),
-            "__list",
-            F.expr("transform(__cq, x -> cast(x as bigint))").alias("__cq"),
-            "__cqn",
+        code, norm, cast = "__cq", "__cqn", "bigint"
+        probe = _sq8_probe(p_listed)
+    else:
+        raise ValueError(
+            f"index at {path} was not built with quantize= — "
+            "rerank has no stored codes to scan"
         )
-        p_q = _sq8_cols(p_listed, "__q_vec", "__q").select(
-            "query_id", "__list", "__qq", "__qqn"
-        )
-        return _sq8_candidate_rerank(
-            c_q, p_q, c_full, p_full,
-            k=k, rerank=rerank, round_digits=round_digits,
-        )
-
-    c_listed = lists.select(
+    c_codes = lists.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__c_vec"),
         "__list",
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-    cos = _dot("__q_vec", "__c_vec") / (F.col("__q_norm") * F.col("__c_norm"))
-    scored = (
-        c_listed.join(F.broadcast(p_listed), on="__list")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos, round_digits).alias("cos_sim"),
-        )
+        F.expr(f"transform({code}, x -> cast(x as {cast}))").alias(code),
+        norm,
     )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
+    return _quantized_topk(
+        c_codes, probe, _side(lists, id_col, vec_col, "c"), p,
+        k=k, rerank=rerank, round_digits=round_digits,
     )
 
 
-def _sq8_candidate_rerank(
-    c_q: DataFrame,
-    p_q: DataFrame,
+def _quantized_topk(
+    c_codes: DataFrame,
+    probe: tuple[DataFrame, Column],
     c_full: DataFrame,
     p_full: DataFrame,
     *,
@@ -1021,78 +934,47 @@ def _sq8_candidate_rerank(
     rerank: int,
     round_digits: int,
 ) -> DataFrame:
-    """The ONE copy of the SQ8 two-stage kernel (quantized candidate rank →
-    exact re-rank), shared by the in-memory ``ivf_sq8_topk`` and the
-    persisted-index ``ivf_search_index(rerank=)`` paths so the R-cut,
-    rounding, and tie-breaks can never diverge between them.
+    """The ONE quantized candidate → exact re-rank path, shared by SQ8 and
+    PQ, in memory (``ivf_sq8_topk``, ``ivf_pq_topk``) and persisted
+    (``ivf_search_index(rerank=)``), so the R-cut, rounding and
+    tie-breaks can never diverge between them.
 
-    Inputs: ``c_q (neighbor_id, __list, __cq, __cqn)`` and ``p_q
-    (query_id, __list, __qq, __qqn)`` — thin quantized sides joined on
-    ``__list``; ``c_full (neighbor_id, __c_vec, __c_norm)`` / ``p_full
-    (query_id, __q_vec, __q_norm)`` — full-precision sides touched only
-    for the ``rerank`` winners per query.
+    ``c_codes (neighbor_id, __list, <codes>)`` is the listed corpus side
+    carrying only its codes; ``probe`` is ``(p_codes, q_sim)`` from
+    ``_sq8_probe`` or ``_pq_probe``. The thin sides join on ``__list``,
+    the per-query ``_topk`` over rounded ``q_sim`` keeps ``rerank`` rows —
+    a bounded set BROADCAST back against the full-precision sides
+    ``c_full``/``p_full`` for the exact top-k.
     """
-    qdot = F.expr(
-        "aggregate(zip_with(__qq, __cq, (x, y) -> x * y),"
+    p_codes, q_sim = probe
+    cands = _list_pairs(c_codes, p_codes).select(
+        "query_id", "neighbor_id", F.round(q_sim, round_digits).alias("q_sim")
+    )
+    top_r = _topk(cands, rerank, "q_sim").select("query_id", "neighbor_id")
+    exact = c_full.join(F.broadcast(top_r), "neighbor_id").join(
+        F.broadcast(p_full), "query_id"
+    )
+    return _exact_topk(exact, k, round_digits)
+
+
+def _int_dot(a: str, b: str) -> Column:
+    """Exact integer dot product of two array<bigint> code columns."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
         " cast(0 as bigint), (acc, v) -> acc + v)"
     )
-    cands = (
-        c_q.join(F.broadcast(p_q), "__list")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                qdot.cast("double") / (F.col("__qqn") * F.col("__cqn")),
-                round_digits,
-            ).alias("q_sim"),
-        )
-    )
-    return _candidate_exact_rerank(
-        cands, c_full, p_full, k=k, rerank=rerank, round_digits=round_digits
-    )
 
 
-def _candidate_exact_rerank(
-    cands: DataFrame,
-    c_full: DataFrame,
-    p_full: DataFrame,
-    *,
-    k: int,
-    rerank: int,
-    round_digits: int,
-) -> DataFrame:
-    """Shared quantized-candidate → exact-cosine re-rank tail (SQ8 and PQ
-    paths): per-query ``row_number`` over (``q_sim`` desc, id) keeps
-    ``rerank`` rows — a bounded set BROADCAST back against the
-    full-precision corpus/probes for the exact top-k. One copy so the
-    R-cut, rounding, and tie-breaks can never diverge between quantizers."""
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("q_sim"), F.asc("neighbor_id")
+def _sq8_probe(p_listed: DataFrame) -> tuple[DataFrame, Column]:
+    """SQ8's part of the quantized path: the listed probes' int8 codes and
+    the quantized cosine against corpus codes ``(__cq, __cqn)``."""
+    p_codes = _sq8_cols(p_listed, "__vq", "__q").select(
+        "query_id", "__list", "__qq", "__qqn"
     )
-    top_r = (
-        cands.withColumn("__qrn", F.row_number().over(wq))
-        .filter(F.col("__qrn") <= rerank)
-        .select("query_id", "neighbor_id")
+    q_sim = _int_dot("__qq", "__cq").cast("double") / (
+        F.col("__qqn") * F.col("__cqn")
     )
-    cos = _dot("__q_vec", "__c_vec") / (F.col("__q_norm") * F.col("__c_norm"))
-    exact = (
-        c_full.join(F.broadcast(top_r), "neighbor_id")
-        .join(F.broadcast(p_full), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos, round_digits).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    return p_codes, q_sim
 
 
 def _sq8_cols(df: DataFrame, vec_col: str, prefix: str) -> DataFrame:
@@ -1113,11 +995,8 @@ def _sq8_cols(df: DataFrame, vec_col: str, prefix: str) -> DataFrame:
             f" x -> cast(round(cast(x as double) / {prefix}s * 127) as bigint))"
         ),
     )
-    qdot = F.expr(
-        f"aggregate(zip_with({prefix}q, {prefix}q, (x, y) -> x * y),"
-        f" cast(0 as bigint), (acc, v) -> acc + v)"
-    )
-    return out.withColumn(f"{prefix}qn", F.sqrt(qdot)).drop(f"{prefix}s")
+    qn = F.sqrt(_int_dot(f"{prefix}q", f"{prefix}q"))
+    return out.withColumn(f"{prefix}qn", qn).drop(f"{prefix}s")
 
 
 def ivf_sq8_topk(
@@ -1161,33 +1040,12 @@ def ivf_sq8_topk(
     |corpus|`` the result provably equals :func:`cosine_topk` (pinned in
     tests).
     """
-    centroids = _ivf_train_centroids(corpus, id_col, vec_col, n_lists)
-    n_cent = max(len(centroids), 1)
-    assign_one = _centroid_assign_batch(centroids, 1)
-    assign_probe = _centroid_assign_batch(centroids, min(nprobe, n_cent))
-
-    c = parallelize_small(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-        )
-    ).withColumn("__list", assign_one(F.col("__c_vec"))[0])
-    c_thin = _sq8_cols(c, "__c_vec", "__c").select(
+    c, p, p_listed = _ivf_sides(corpus, probes, id_col, vec_col, n_lists, nprobe)
+    c_codes = _sq8_cols(c, "__vc", "__c").select(
         "neighbor_id", "__list", "__cq", "__cqn"
     )
-    p = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__list", F.explode(assign_probe(F.col("__q_vec"))))
-    p_thin = _sq8_cols(p, "__q_vec", "__q").select(
-        "query_id", "__list", "__qq", "__qqn"
-    )
-    c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-    p_full = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-    return _sq8_candidate_rerank(
-        c_thin, p_thin, c_full, p_full,
+    return _quantized_topk(
+        c_codes, _sq8_probe(p_listed), _side(corpus, id_col, vec_col, "c"), p,
         k=k, rerank=rerank, round_digits=round_digits,
     )
 
@@ -1314,6 +1172,29 @@ def _pq_adc_table_batch(codebooks: "np.ndarray"):
     return table
 
 
+def _pq_probe(
+    p_listed: DataFrame, books: "np.ndarray"
+) -> tuple[DataFrame, Column]:
+    """PQ's part of the quantized path: the listed probes' flattened ADC
+    tables (``m·ksub`` doubles — a per-QUERY object, never corpus-scale)
+    and the ADC cosine against corpus codes ``(__pqc, __pqn)``: indexed
+    table lookups folded LEFT-TO-RIGHT (fixed order → deterministic
+    doubles), all JVM-side, over (query norm · reconstruction norm)."""
+    ksub = books.shape[1]
+    p_codes = p_listed.select(
+        "query_id",
+        "__list",
+        _pq_adc_table_batch(books)(F.col("__vq")).alias("__qtab"),
+        "__nq",
+    )
+    adc_ip = F.expr(
+        f"aggregate(transform(__pqc,"
+        f" (c, j) -> element_at(__qtab, j * {int(ksub)} + c + 1)),"
+        f" cast(0 as double), (acc, v) -> acc + v)"
+    )
+    return p_codes, adc_ip / (F.col("__nq") * F.col("__pqn"))
+
+
 def ivf_pq_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -1353,7 +1234,7 @@ def ivf_pq_topk(
        lookup per code) + left-fold ``aggregate`` — fixed evaluation
        order, so scores are deterministic on any partitioning; quantized
        cosine divides by (query norm · reconstruction norm).
-    3. the shared :func:`_candidate_exact_rerank` tail keeps ``rerank``
+    3. the shared :func:`_quantized_topk` path keeps ``rerank``
        candidates per query and re-ranks them at full precision.
 
     Correctness envelope: codebooks are DATA-DEPENDENT (trained), so
@@ -1363,63 +1244,17 @@ def ivf_pq_topk(
     ``rerank ≥ |corpus|`` (with ``nprobe = n_lists``) provably equal to
     :func:`cosine_topk`.
     """
-    centroids = _ivf_train_centroids(corpus, id_col, vec_col, n_lists)
-    n_cent = max(len(centroids), 1)
-    assign_one = _centroid_assign_batch(centroids, 1)
-    assign_probe = _centroid_assign_batch(centroids, min(nprobe, n_cent))
+    c, p, p_listed = _ivf_sides(corpus, probes, id_col, vec_col, n_lists, nprobe)
     books = _pq_train_codebooks(corpus, id_col, vec_col, m, ksub)
-    encode = _pq_encode_batch(books)
-    adc_table = _pq_adc_table_batch(books)
-
-    c = parallelize_small(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-        )
-    ).withColumn("__list", assign_one(F.col("__c_vec"))[0])
-    c_thin = (
-        c.withColumn("__enc", encode(F.col("__c_vec")))
-        .select(
-            "neighbor_id",
-            "__list",
-            F.col("__enc.codes").alias("__pqc"),
-            F.col("__enc.rnorm").alias("__pqn"),
-        )
-    )
-    p = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__list", F.explode(assign_probe(F.col("__q_vec"))))
-    p_thin = p.select(
-        "query_id",
+    c_codes = c.withColumn("__enc", _pq_encode_batch(books)(F.col("__vc"))).select(
+        "neighbor_id",
         "__list",
-        adc_table(F.col("__q_vec")).alias("__qtab"),
-        F.sqrt(_dot("__q_vec", "__q_vec")).alias("__qn"),
+        F.col("__enc.codes").alias("__pqc"),
+        F.col("__enc.rnorm").alias("__pqn"),
     )
-    # quantized IP: indexed table lookups folded LEFT-TO-RIGHT (fixed
-    # order -> deterministic doubles), all JVM-side
-    adc_ip = F.expr(
-        f"aggregate(transform(__pqc,"
-        f" (c, j) -> element_at(__qtab, j * {int(ksub)} + c + 1)),"
-        f" cast(0 as double), (acc, v) -> acc + v)"
-    )
-    cands = (
-        c_thin.join(F.broadcast(p_thin), "__list")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                adc_ip / (F.col("__qn") * F.col("__pqn")), round_digits
-            ).alias("q_sim"),
-        )
-    )
-    c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__c_vec")
-    ).withColumn("__c_norm", F.sqrt(_dot("__c_vec", "__c_vec")))
-    p_full = probes.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    ).withColumn("__q_norm", F.sqrt(_dot("__q_vec", "__q_vec")))
-    return _candidate_exact_rerank(
-        cands, c_full, p_full, k=k, rerank=rerank, round_digits=round_digits
+    return _quantized_topk(
+        c_codes, _pq_probe(p_listed, books), _side(corpus, id_col, vec_col, "c"), p,
+        k=k, rerank=rerank, round_digits=round_digits,
     )
 
 
@@ -1478,31 +1313,17 @@ def semantic_dedup(
         [(i, [float(x) for x in c]) for i, c in enumerate(c_unit)],
         "__cl int, __cvec array<double>",
     )
-    base = (
-        parallelize_small(
-            df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        )
-        .withColumn("__n", F.sqrt(_dot("__v", "__v")))
-        .withColumn("__cl", assign_one(F.col("__v"))[0])
+    base = _side(df, id_col, vec_col, "", spread=True).withColumn(
+        "__cl", assign_one(F.col("__v"))[0]
     )
     # distance-to-centroid for the survivor policy (broadcast: centroid
     # table is n_clusters rows, config-sized)
     base = base.join(F.broadcast(cent_df), "__cl").withColumn(
         "__cent_sim", _dot("__v", "__cvec") / F.col("__n")
     ).drop("__cvec")
-    a = base.select(
-        F.col("__id").alias("id_1"),
-        F.col("__v").alias("__v1"),
-        F.col("__n").alias("__n1"),
-        "__cl",
-    )
-    b = base.select(
-        F.col("__id").alias("id_2"),
-        F.col("__v").alias("__v2"),
-        F.col("__n").alias("__n2"),
-        "__cl",
-    )
-    cos = _dot("__v1", "__v2") / (F.col("__n1") * F.col("__n2"))
+    a = _retag(base, "1", "__cl")
+    b = _retag(base, "2", "__cl")
+    cos = _cos("1", "2")
     if round_digits is not None:
         # cross-engine determinism mode (same convention as
         # embedding_neardup_pairs): round before the threshold compare so

@@ -258,18 +258,6 @@ def shingles_from_words(arr: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Array of n-word shingles (lowercased). Sequence indices are handled
-    0-based here / 1-based in the SQL twin — same shingle set either way.
-
-    Prefer ``shingles_from_words`` over a materialized word-array column in
-    hot paths (see its docstring for why); this inline form re-evaluates the
-    tokenizing split per element.
-    """
-    arr = words(F.lower(F.col(col) if isinstance(col, str) else col))
-    return shingles_from_words(arr, n)
-
-
 # PII patterns for training-data scrubbing. Deliberately written in the
 # regex intersection of Java (Spark) and RE2 (DuckDB): no backreferences,
 # no lookaround — the same pattern string produces the same redaction in

@@ -2737,14 +2737,13 @@ def test_pq_persisted_index_candidate_scan_skips_float_column(
     """quantize='pq' index: the candidate scan's ReadSchema carries the
     subspace codes but NOT the float embedding column (2*m bytes/vector
     vs 8*dim — the 32x at-rest reduction); exhaustive dials equal exact
-    brute force, and production dials equal the in-memory ivf_pq_topk
-    (same deterministic training -> same codebooks -> same answer)."""
+    brute force. Persisted == in-memory at other dials is
+    test_persisted_index_matches_in_memory_operator."""
     import re
 
     from global_market_index_etl_spark.operators.similarity import (
         cosine_topk,
         ivf_build_index,
-        ivf_pq_topk,
         ivf_search_index,
     )
 
@@ -2771,25 +2770,49 @@ def test_pq_persisted_index_candidate_scan_skips_float_column(
     # the float column is read by exactly the re-rank scan
     assert any("embedding" in s and "__pqc" not in s for s in schemas)
 
-    # production dials: persisted search == in-memory operator
-    got = sorted(
-        map(
-            tuple,
-            ivf_search_index(
-                spark, path, probes, k=5, nprobe=8, rerank=25
-            ).collect(),
-        )
+
+@pytest.mark.parametrize("quantize", [False, "sq8", "pq"])
+def test_persisted_index_matches_in_memory_operator(spark, tmp_path, quantize):
+    """ivf_search_index over a persisted index returns exactly what the
+    in-memory operator of the same layout returns: same deterministic
+    training (2 Lloyd rounds, the index default) -> same lists, codes and
+    codebooks -> same answer, at every list and rerank dial, including a
+    partial probe (nprobe < n_lists) and an R-cut below |corpus|."""
+    from global_market_index_etl_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_cosine_topk,
+        ivf_pq_topk,
+        ivf_search_index,
+        ivf_sq8_topk,
     )
-    mem = sorted(
-        map(
-            tuple,
-            ivf_pq_topk(
-                emb, probes, k=5, n_lists=8, nprobe=8, m=8, ksub=16,
-                rerank=25,
-            ).collect(),
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    probes = emb.filter(F.col("vec_id") < 5)
+    path = str(tmp_path / "idx")
+    ivf_build_index(emb, path, n_lists=8, quantize=quantize, pq_m=8, pq_ksub=16)
+
+    for nprobe, rerank in [(8, 25), (4, 20)]:
+        if quantize == "pq":
+            mem = ivf_pq_topk(
+                emb, probes, k=5, n_lists=8, nprobe=nprobe, m=8, ksub=16,
+                rerank=rerank,
+            )
+        elif quantize == "sq8":
+            mem = ivf_sq8_topk(
+                emb, probes, k=5, n_lists=8, nprobe=nprobe, rerank=rerank
+            )
+        else:
+            rerank = None
+            mem = ivf_cosine_topk(
+                emb, probes, k=5, n_lists=8, nprobe=nprobe,
+                train_iterations=2,
+            )
+        got = ivf_search_index(
+            spark, path, probes, k=5, nprobe=nprobe, rerank=rerank
         )
-    )
-    assert got == mem
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, mem.collect())
+        ), (quantize, nprobe, rerank)
 
 
 def test_build_index_rejects_unknown_quantize(spark, tmp_path):
