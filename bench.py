@@ -372,23 +372,17 @@ def _trim_session(spark) -> None:
     """Release the state a long capture accumulates before switching
     datasets (round-14 verdict finding 2: by the smoke block, cached
     reductions from three datasets had aged the 8g JVM until a 2.8 s
-    query read 16.4 s). Drops every materialize_shared entry and all
-    Dataset caches, then lets ContextCleaner reap unreachable blocks.
-    Semantics are unchanged — the next identical call re-materializes;
-    a median-of-reps absorbs the one-time rebuild."""
+    query read 16.4 s). Drops all Dataset caches, then lets
+    ContextCleaner reap unreachable blocks. Semantics are unchanged —
+    the next identical call re-materializes; a median-of-reps absorbs
+    the one-time rebuild."""
     import gc
 
-    from global_market_index_etl_spark.operators.util import (
-        clear_shared_cache,
-    )
-
-    n = clear_shared_cache()
     try:
         spark.catalog.clearCache()
     except Exception as e:  # pragma: no cover - defensive
         print(f"bench: clearCache failed: {e}", file=sys.stderr)
     gc.collect()
-    print(f"bench: session trim released {n} shared tables", file=sys.stderr)
 
 
 def _ensure_sf1() -> str | None:

@@ -319,7 +319,10 @@ def _centroid_assign_batch(centroids: "np.ndarray", nprobe: int):
 
 def _probe_lists(p: DataFrame, centroids: "np.ndarray", nprobe: int) -> DataFrame:
     """A probe side exploded to its ``nprobe`` nearest lists: one row per
-    (probe, list)."""
+    (probe, list). An empty corpus trains no centroids, so no probe gets a
+    list and every candidate join is empty, as in :func:`cosine_topk`."""
+    if len(centroids) == 0:
+        return p.withColumn("__list", F.explode(F.array().cast("array<int>")))
     assign = _centroid_assign_batch(centroids, min(nprobe, len(centroids)))
     return p.withColumn("__list", F.explode(assign(F.col("__vq"))))
 

@@ -79,7 +79,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .util import materialize, materialize_shared
+from .util import materialize
 from .util import spread_for_explode as _spread_for_explode
 
 __all__ = [
@@ -340,7 +340,6 @@ def remove_duplicate_spans(
     k: int = 8,
     n_salts: int = N_SALTS,
     checkpoint_dir: str | None = None,
-    share_cache: bool = True,
 ) -> DataFrame:
     """Rewrite each document with cross-document duplicate spans REMOVED.
 
@@ -363,19 +362,14 @@ def remove_duplicate_spans(
     across them — column pruning gives the verdict side a narrower
     exchange schema (no ``__pos``) than the probe side — so without the
     persist the whole window explode + fingerprint pass runs TWICE (at
-    sf1: 39 s + 45 s executor time, the query's dominant cost).
-
-    ``share_cache=True`` (default) memoizes the persisted reduction per
-    (process, plan) via :func:`util.materialize_shared`, which REQUIRES
-    the input to be immutable between calls (the fixture parquet tables
-    qualify); a caller reading mutated source data must pass
-    ``share_cache=False``.  ``checkpoint_dir`` switches to a reliable
-    checkpoint for executor-loss-safe cluster runs.
+    sf1: 39 s + 45 s executor time, the query's dominant cost).  Repeat
+    calls over the same input reuse the live cache (:func:`util.materialize`).
+    ``checkpoint_dir`` switches to a reliable checkpoint for
+    executor-loss-safe cluster runs.
     """
     _check_params(k, n_salts)
-    _mat = materialize_shared if share_cache else materialize
     toks = _tokens(docs, doc_id, text_col)
-    per_doc = _mat(
+    per_doc = materialize(
         _doc_windows(_windows(toks, doc_id, k), doc_id, n_salts),
         checkpoint_dir=checkpoint_dir,
     )
@@ -391,7 +385,6 @@ def duplicate_span_suite(
     k: int = 8,
     n_salts: int = N_SALTS,
     checkpoint_dir: str | None = None,
-    share_cache: bool = True,
 ) -> DataFrame:
     """Profile AND removal in one fused plan — the tagged-leg union of
     :func:`duplicate_window_profile` ('profile') and
@@ -412,25 +405,18 @@ def duplicate_span_suite(
     join-back run once PER LEG.  It is the reduction plus a boolean — the
     same bounded cache footprint.
 
-    ``share_cache=True`` (default) memoizes the persisted tables per
-    (process, plan) via :func:`util.materialize_shared`: repeat
-    invocations over the same input reuse one persisted table instead of
-    stacking a fresh copy per call.  THIS REQUIRES THE INPUT TO BE
-    IMMUTABLE between calls — the fixture parquet tables the registry
-    reads qualify; a caller whose semantically-identical plan reads
-    MUTATED source data (a maintained table path, a streaming delta dir)
-    must pass ``share_cache=False`` to get a private, per-call
-    materialization.  ``checkpoint_dir`` switches the materialization to
-    a reliable checkpoint for executor-loss-safe cluster runs
-    (util.truncate_lineage semantics)."""
+    Repeat invocations over the same input reuse the live persisted
+    tables instead of stacking a fresh copy per call
+    (:func:`util.materialize`).  ``checkpoint_dir`` switches the
+    materialization to a reliable checkpoint for executor-loss-safe
+    cluster runs (util.truncate_lineage semantics)."""
     _check_params(k, n_salts)
-    _mat = materialize_shared if share_cache else materialize
     toks = _tokens(docs, doc_id, text_col)
-    per_doc = _mat(
+    per_doc = materialize(
         _doc_windows(_windows(toks, doc_id, k), doc_id, n_salts),
         checkpoint_dir=checkpoint_dir,
     )
-    flagged = _mat(
+    flagged = materialize(
         per_doc.join(
             _dup_verdicts(per_doc, doc_id), ["__w", "__salt"], "left"
         ),

@@ -2,9 +2,7 @@
 
 from __future__ import annotations
 
-import os as _os
 import threading
-from collections import OrderedDict
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -152,6 +150,14 @@ def spread_for_explode(df: DataFrame, *cols, expansion: int = 8) -> DataFrame:
     return df.repartition(int(n), *cols)
 
 
+# Frames persisted by materialize, oldest first. Past the cap the oldest
+# are unpersisted, so a long process (bench reps, dataset switches,
+# per-batch streaming persists) holds at most this many cached tables.
+_MATERIALIZED_MAX = 12
+_MATERIALIZED: list[DataFrame] = []
+_MATERIALIZED_LOCK = threading.Lock()
+
+
 def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Eagerly compute a subtree that several downstream branches reuse.
 
@@ -165,161 +171,44 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     OOMs). The eager count avoids concurrent branch stages double-computing
     a cold cache.
 
-    ``checkpoint_dir`` (round-11 verdict item: wire the dial everywhere)
-    switches the materialization from a persist to a RELIABLE checkpoint
-    under the given fault-tolerant directory — same executor-loss-safety
-    trade as :func:`truncate_lineage`, for 100-TB cluster runs.
+    Reuse is Spark's own: its CacheManager matches any plan against the
+    live caches by ``sameResult``, so a freshly built plan equal to a
+    cached one already reports a ``storageLevel`` and is returned as is,
+    with no job and no second copy (repeat registry calls, bench reps and
+    per-call indexes all land here). A new persist is recorded in one
+    process-wide list; past ``_MATERIALIZED_MAX`` (12) entries the oldest
+    are unpersisted (non-blocking), and a later call over the same plan
+    simply persists it again. Eviction never changes results: an evicted
+    table is recomputed from its lineage, as after a lost executor. A
+    count that raises leaves nothing persisted and nothing recorded.
+
+    Spark refreshes a cache when its source is overwritten through Spark's
+    own writers. A source rewritten outside Spark is not seen: call
+    ``spark.catalog.refreshByPath(path)`` first, or a cached plan over the
+    old files is served.
+
+    ``checkpoint_dir`` switches the materialization from a persist to a
+    RELIABLE checkpoint under the given fault-tolerant directory — same
+    executor-loss-safety trade as :func:`truncate_lineage`, for 100-TB
+    cluster runs; it is not recorded in the list.
     """
     if checkpoint_dir is not None:
         return truncate_lineage(df, checkpoint_dir=checkpoint_dir)
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
+    try:
+        df.count()
+    except BaseException:
+        df.unpersist()
+        raise
+    with _MATERIALIZED_LOCK:
+        _MATERIALIZED.append(df)
+        evicted = _MATERIALIZED[:-_MATERIALIZED_MAX]
+        del _MATERIALIZED[:-_MATERIALIZED_MAX]
+        for old in evicted:
+            old.unpersist(blocking=False)  # a no-op if cleared meanwhile
     return df
-
-
-# materialize_shared cache: LRU of (session, semanticHash, ckpt) →
-# _SharedEntry(plan_df, event, materialized). Guarded by sameSemantics on
-# hit, so a 32-bit hash collision can never return the wrong table. Each
-# distinct shared subtree is persisted exactly ONCE per process instead of
-# once per invocation (round-11 advice: repeated bench reps / driver
-# checks were stacking a fresh never-unpersisted copy per call) — and the
-# cache is BOUNDED: holding strong references forever would pin every
-# dataset's blocks in storage memory (Spark's ContextCleaner only frees
-# persists whose DataFrames become unreachable), and a multi-dataset
-# bench run (sf0.1 → sf1 → 30× smoke in one 8g JVM) measurably degraded
-# under that pressure. Beyond the cap, the least-recently-used COMPLETED
-# entry is unpersisted and dropped; a later identical call just
-# re-materializes.
-#
-# The global lock only guards the cache map itself: the eager
-# materialize() count (a potentially long Spark job) runs OUTSIDE it
-# against a placeholder entry, so concurrent callers materializing
-# DIFFERENT subtrees proceed in parallel and only identical-plan callers
-# block — on the placeholder's event, not on the lock (round-12 advice).
-_SHARED_CACHE_MAX = int(_os.environ.get("SPARK_GRAFT_SHARED_CACHE_MAX", "12"))
-
-
-class _SharedEntry:
-    __slots__ = ("plan_df", "event", "mat")
-
-    def __init__(self, plan_df: DataFrame):
-        self.plan_df = plan_df
-        self.event = threading.Event()
-        self.mat: DataFrame | None = None
-
-
-_SHARED_CACHE: "OrderedDict[tuple, _SharedEntry]" = OrderedDict()
-_SHARED_CACHE_LOCK = threading.Lock()
-
-
-def materialize_shared(
-    df: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
-    """:func:`materialize`, memoized per (session, logical plan) with a
-    bounded LRU.
-
-    Repeat invocations that build the SAME subtree (bench reps, repeated
-    driver checks, suite legs constructed per call) get back the one
-    already-persisted table instead of persisting a new copy each time.
-    Keyed by ``semanticHash`` and verified with ``sameSemantics`` (exact
-    plan equivalence, not just hash equality) plus ``checkpoint_dir``;
-    sessions key apart because a hit additionally requires the same live
-    session. At most ``SPARK_GRAFT_SHARED_CACHE_MAX`` (default 12)
-    entries stay live — evicted entries are unpersisted so switching
-    datasets (sf0.1 → sf1) releases the old dataset's blocks instead of
-    squeezing execution memory.
-
-    Concurrency: the eager count runs outside the cache lock. The first
-    caller of a given plan inserts a placeholder and materializes;
-    concurrent callers of the SAME plan wait on the placeholder's event;
-    callers of DIFFERENT plans are never serialized behind someone
-    else's Spark job. If the owning call fails, the placeholder is
-    removed and waiters retry the materialization themselves.
-
-    ONLY for deterministic subtrees over immutable inputs (the fixture
-    parquet tables): a plan whose SOURCE content mutates between calls
-    (a maintained table path, a streaming delta dir) must use plain
-    :func:`materialize` — the cache would serve the old snapshot.
-    """
-    h = df.semanticHash()
-    while True:
-        owner_key = None
-        with _SHARED_CACHE_LOCK:
-            hit = None
-            for key, ent in _SHARED_CACHE.items():
-                sess, kh, ckpt = key[:3]
-                if (
-                    kh == h
-                    and ckpt == checkpoint_dir
-                    and sess is df.sparkSession
-                    and df.sameSemantics(ent.plan_df)
-                ):
-                    _SHARED_CACHE.move_to_end(key)
-                    hit = ent
-                    break
-            if hit is None:
-                entry = _SharedEntry(df)
-                owner_key = (df.sparkSession, h, checkpoint_dir, id(df))
-                _SHARED_CACHE[owner_key] = entry
-        if owner_key is None:
-            # someone else owns (or owned) this plan — wait for its
-            # materialization; a set event with mat=None means the owner
-            # failed and removed the entry, so loop and retry as owner.
-            hit.event.wait()
-            if hit.mat is not None:
-                return hit.mat
-            continue
-        try:
-            mat = materialize(df, checkpoint_dir=checkpoint_dir)
-        except BaseException:
-            with _SHARED_CACHE_LOCK:
-                _SHARED_CACHE.pop(owner_key, None)
-            entry.event.set()
-            raise
-        entry.mat = mat
-        entry.event.set()
-        with _SHARED_CACHE_LOCK:
-            # evict least-recently-used COMPLETED entries over the cap;
-            # in-flight placeholders are skipped (their owners hold
-            # references and will complete them).
-            done_keys = [
-                k
-                for k, e in _SHARED_CACHE.items()
-                if e.event.is_set() and k != owner_key
-            ]
-            excess = len(_SHARED_CACHE) - _SHARED_CACHE_MAX
-            for k in done_keys[:max(0, excess)]:
-                old = _SHARED_CACHE.pop(k)
-                if old.mat is not None:
-                    try:
-                        old.mat.unpersist(blocking=False)
-                    except Exception:
-                        pass  # checkpointed or dead-session entry
-        return mat
-
-
-def clear_shared_cache() -> int:
-    """Unpersist and drop every COMPLETED :func:`materialize_shared`
-    entry; returns how many were released.
-
-    For long-lived processes that switch datasets mid-flight (bench.py's
-    sf0.1 → sf1 → 30× smoke sequence in one 8g JVM — round-14 verdict
-    finding 2: by the smoke block, leftover cached reductions from three
-    datasets were squeezing execution memory and a 2.8 s query read
-    16.4 s). Safe at any point: the next identical call simply
-    re-materializes and re-caches — semantics are unchanged, only the
-    one-time persist cost is paid again (a median-of-3 absorbs it).
-    In-flight placeholders are left for their owners to complete."""
-    with _SHARED_CACHE_LOCK:
-        done = [k for k, e in _SHARED_CACHE.items() if e.event.is_set()]
-        entries = [_SHARED_CACHE.pop(k) for k in done]
-    for ent in entries:
-        if ent.mat is not None:
-            try:
-                ent.mat.unpersist(blocking=True)
-            except Exception:
-                pass  # checkpointed or dead-session entry
-    return len(entries)
 
 
 def truncate_lineage(

@@ -371,9 +371,6 @@ def dedup_minhash_lsh(spark, sf):
     )
 
 
-_MINHASH_INDEXES: dict[str, tuple] = {}
-
-
 @query(
     "dedup_incremental_minhash",
     r"""
@@ -429,20 +426,14 @@ def dedup_incremental_minhash(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     # the index is PERSISTED state in the scenario this row plays (built
-    # when those docs were ingested) — cache it materialized per
-    # (process, sf) like k6's stats table and the scd2 stream, so bench
-    # reps measure the BATCH path (sign batch + bucket-probe + verify),
-    # which is the incremental claim; the index build ran for real once
-    if sf not in _MINHASH_INDEXES:
-        bands, arrays = minhash_index(docs.filter(F.col("doc_id") % 5 != 0))
-        _MINHASH_INDEXES[sf] = (materialize(bands), materialize(arrays))
-    bands, arrays = _MINHASH_INDEXES[sf]
+    # when those docs were ingested) — materialize it, and repeat calls
+    # reuse the live cache, so bench reps measure the BATCH path (sign
+    # batch + bucket-probe + verify), which is the incremental claim
+    bands, arrays = minhash_index(docs.filter(F.col("doc_id") % 5 != 0))
+    bands, arrays = materialize(bands), materialize(arrays)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     pairs, _, _ = incremental_minhash_pairs(batch, bands, arrays)
     return pairs
-
-
-_EMB_SIG_INDEXES: dict[str, object] = {}
 
 
 @query(
@@ -509,13 +500,10 @@ def dedup_incremental_embedding(spark, sf):
 
     corpus = load_table(spark, sf, "embeddings")
     # the signature index is PERSISTED state in the scenario this row
-    # plays (built when the store was populated) — cached materialized per
-    # (process, sf) like the minhash index above, so bench reps measure
-    # the BATCH path (sign 12 vectors + bucket probe + verify), which is
-    # the incremental claim; the index build ran for real once
-    if sf not in _EMB_SIG_INDEXES:
-        _EMB_SIG_INDEXES[sf] = materialize(embedding_lsh_index(corpus))
-    index = _EMB_SIG_INDEXES[sf]
+    # plays (built when the store was populated) — materialized like the
+    # minhash index above, so bench reps measure the BATCH path (sign 12
+    # vectors + bucket probe + verify), which is the incremental claim
+    index = materialize(embedding_lsh_index(corpus))
     pairs, _ = incremental_embedding_neardup_pairs(
         _emb_blend_batch(corpus), index, corpus, threshold=0.95
     )
@@ -543,9 +531,6 @@ def _emb_blend_batch(corpus):
             lambda x, y: ((F.lit(1.0) - alpha) * x + alpha * y).cast("float"),
         ).alias("embedding"),
     )
-
-
-_PHASH_SIG_INDEXES: dict[str, object] = {}
 
 
 @query(
@@ -582,17 +567,12 @@ def dedup_incremental_phash(spark, sf):
 
     media = _phash_corpus_media(spark, sf)
     # the signature index is PERSISTED state in the scenario this row
-    # plays (hashed when those images were ingested) — cached materialized
-    # per (process, sf) like the minhash/embedding indexes above, so bench
-    # reps measure the BATCH path (decode + DCT the batch, bucket-probe,
-    # exact Hamming verify), which is the incremental claim
-    if sf not in _PHASH_SIG_INDEXES:
-        _PHASH_SIG_INDEXES[sf] = materialize(
-            image_phash(
-                media.filter(F.col("media_id") % 2 == 0), payload_col="img"
-            )
-        )
-    index = _PHASH_SIG_INDEXES[sf]
+    # plays (hashed when those images were ingested) — materialized like
+    # the minhash/embedding indexes above, so bench reps measure the BATCH
+    # path (decode + DCT the batch, bucket-probe, exact Hamming verify),
+    # which is the incremental claim
+    stored = media.filter(F.col("media_id") % 2 == 0)
+    index = materialize(image_phash(stored, payload_col="img"))
     batch = media.filter(F.col("media_id") % 2 == 1)
     pairs, _ = incremental_phash_pairs(batch, index, payload_col="img")
     return pairs
@@ -1303,9 +1283,6 @@ def decon_eval_overlap(spark, sf):
     return contamination_hits(corpus, eval_df, n=3, min_hits=3)
 
 
-_FUZZY_CORPUS_INDEXES: dict[str, tuple] = {}
-
-
 @query(
     "decon_fuzzy_overlap",
     r"""
@@ -1378,17 +1355,15 @@ def decon_fuzzy_overlap(spark, sf):
     eval_df = docs.filter(F.col("doc_id") % 7 == 0)
     # the corpus signing is reusable state (the operator's corpus_index
     # contract: decontaminate against each new benchmark without
-    # re-reading the corpus) — cache it materialized per (process, sf)
-    # like the incremental-minhash row, so bench reps measure the
-    # per-benchmark path: sign the eval set, broadcast-probe, verify
-    if sf not in _FUZZY_CORPUS_INDEXES:
-        bands, arrays = minhash_index(corpus)
-        _FUZZY_CORPUS_INDEXES[sf] = (materialize(bands), materialize(arrays))
+    # re-reading the corpus) — materialized like the incremental-minhash
+    # row, so bench reps measure the per-benchmark path: sign the eval
+    # set, broadcast-probe, verify
+    bands, arrays = minhash_index(corpus)
     return fuzzy_contamination_pairs(
         corpus,
         eval_df,
         threshold=0.8,
-        corpus_index=_FUZZY_CORPUS_INDEXES[sf],
+        corpus_index=(materialize(bands), materialize(arrays)),
     )
 
 
@@ -1808,7 +1783,7 @@ def curation_pipeline(spark, sf):
     from ..operators.dedup import connected_components_auto
     from ..operators.sampling import train_val_test_split
     from ..operators.text import fingerprint_md5, quality_score
-    from ..operators.util import materialize_shared, parallelize_small
+    from ..operators.util import materialize, parallelize_small
 
     docs = parallelize_small(load_table(spark, sf, "documents"))
     # Materialize the quality survivors: the regex-feature scoring subtree
@@ -1817,7 +1792,7 @@ def curation_pipeline(spark, sf):
     # the regexp_count feature scan (the same heavy-regex × many-consumers
     # shape as curation_pipeline_v2's fix). Measured 1.7 → 1.2 s at sf0.1
     # and 4.7 → 1.2 s at sf1; identical output.
-    kept = materialize_shared(
+    kept = materialize(
         quality_score(docs)
         .filter(F.col("quality_score") >= 0.5)
         .select("doc_id", "text", "quality_score")
@@ -2578,7 +2553,7 @@ def curation_pipeline_v2(spark, sf):
     from ..operators.sampling import train_val_test_split
     from ..operators.spans import remove_duplicate_spans
     from ..operators.text import model_quality_classifier
-    from ..operators.util import materialize_shared, parallelize_small
+    from ..operators.util import materialize, parallelize_small
 
     docs = parallelize_small(load_table(spark, sf, "documents"))
     # Materialize the classifier survivors: remove_duplicate_spans derives
@@ -2588,7 +2563,7 @@ def curation_pipeline_v2(spark, sf):
     # re-runs the heavy regex scan. One MEMORY_AND_DISK persist of the
     # (id, text) survivor set wins as data grows: measured a wash at
     # sf0.1 (2.7 vs 2.7 s) and 10.8 → 6.5 s at sf1; identical output.
-    kept = materialize_shared(
+    kept = materialize(
         model_quality_classifier(docs)
         .filter(F.col("keep"))
         .select("doc_id", "text")
@@ -2676,7 +2651,7 @@ def curation_pipeline_v3(spark, sf):
     from ..operators.lm import score_bigram_bits_scaled, train_bigram_lm
     from ..operators.sampling import corpus_mix_temperature_tokens
     from ..operators.text import token_count
-    from ..operators.util import materialize_shared, parallelize_small
+    from ..operators.util import materialize, parallelize_small
 
     docs = parallelize_small(load_table(spark, sf, "documents")).select(
         "doc_id", "lang", "text"
@@ -2687,7 +2662,7 @@ def curation_pipeline_v3(spark, sf):
     # branch from the corpus scan (no exchange reuse across the join mix —
     # the dedup-pipeline lesson), so persist BOTH small relations: 36
     # corpus scans collapse to 2 passes, measured 2.8 s → 1.1 s at sf0.1
-    model = materialize_shared(train_bigram_lm(docs))
+    model = materialize(train_bigram_lm(docs))
     scored = score_bigram_bits_scaled(docs, model)
     enriched = (
         docs.join(scored, "doc_id")
@@ -2698,7 +2673,7 @@ def curation_pipeline_v3(spark, sf):
         (F.col("n_bigrams") >= 1)
         & (F.col("bits_scaled") <= F.lit(4_920_000_000) * F.col("n_bigrams"))
     )
-    mixed = materialize_shared(
+    mixed = materialize(
         corpus_mix_temperature_tokens(kept, "lang", 0.5, "doc_id", "n_tokens")
     )
     packed = pack_documents_best_fit(
@@ -2752,12 +2727,12 @@ def curation_pipeline_v3(spark, sf):
 )
 def text_ppl_buckets(spark, sf):
     from ..operators.lm import score_bigram_bits_scaled, train_bigram_lm
-    from ..operators.util import materialize_shared, parallelize_small
+    from ..operators.util import materialize, parallelize_small
 
     docs = parallelize_small(load_table(spark, sf, "documents")).select(
         "doc_id", "lang", "text"
     )
-    model = materialize_shared(train_bigram_lm(docs))
+    model = materialize(train_bigram_lm(docs))
     scored = score_bigram_bits_scaled(docs, model).filter(
         F.col("n_bigrams") >= 1
     )
@@ -2894,7 +2869,7 @@ def mm_real_decode_stats(spark, sf):
 
     from ..operators.multimodal import audio_features, video_motion_features
     from ..operators.phash import image_phash
-    from ..operators.util import materialize_shared, parallelize_small
+    from ..operators.util import materialize, parallelize_small
 
     media_schema = StructType(
         [
@@ -2976,7 +2951,7 @@ def mm_real_decode_stats(spark, sf):
     )
     # four consumers (stats + three feature operators) — cache the
     # synthesized payloads once instead of re-encoding per branch
-    media = materialize_shared(docs.mapInPandas(batches, media_schema))
+    media = materialize(docs.mapInPandas(batches, media_schema))
     stats = media.select(
         "doc_id", "container", "height", "width", "n_bytes", "mean_milli"
     )

@@ -6,8 +6,12 @@ Usage:
     python scripts/capture_plans.py before [query ...]
     python scripts/capture_plans.py after  [query ...]
 
-With no query names, captures every bench.HEADLINE query. Plan-only
-(no execution): cheap, safe to run alongside other work. The files are
+With no query names, captures every bench.HEADLINE query. Most rows
+only plan, but building a row with trained or persisted parts runs Spark
+jobs before ``explain``: the IVF, SQ8 and PQ rows (centroid and codebook
+training collects), semantic dedup and incremental embedding
+(``auto_lsh_params`` counts, training collects), and every row that
+materializes a shared subtree (its eager count). The files are
 the round-15 optimization deliverable the judge reads plan claims
 against (<query>_before.txt / <query>_after.txt).
 """

@@ -2815,6 +2815,24 @@ def test_persisted_index_matches_in_memory_operator(spark, tmp_path, quantize):
         ), (quantize, nprobe, rerank)
 
 
+@pytest.mark.parametrize(
+    "op", ["ivf_cosine_topk", "ivf_sq8_topk", "ivf_pq_topk"]
+)
+def test_in_memory_ivf_empty_corpus_matches_cosine_topk(spark, op):
+    """An empty corpus trains no centroids; the in-memory IVF operators
+    then return what their exact reference returns: no rows, same
+    schema."""
+    from global_market_index_etl_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    probes = emb.filter(F.col("vec_id") == 0)
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    got = getattr(similarity, op)(empty, probes, k=5)
+    exact = similarity.cosine_topk(empty, probes, k=5)
+    assert got.schema == exact.schema
+    assert got.collect() == exact.collect() == []
+
+
 def test_build_index_rejects_unknown_quantize(spark, tmp_path):
     import pytest
 

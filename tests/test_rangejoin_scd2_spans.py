@@ -791,20 +791,12 @@ def test_planted_hot_window_salt_invariance(spark):
             exact_substring_dedup(df, min_len=k, n_salts=n_salts)
         ) == base
 
-    suite1 = rows(
-        duplicate_span_suite(df, k=k, n_salts=1, share_cache=False)
-    )
-    suite16 = rows(
-        duplicate_span_suite(df, k=k, n_salts=16, share_cache=False)
-    )
+    suite1 = rows(duplicate_span_suite(df, k=k, n_salts=1))
+    suite16 = rows(duplicate_span_suite(df, k=k, n_salts=16))
     assert suite1 == suite16
 
-    removed1 = rows(
-        remove_duplicate_spans(df, k=k, n_salts=1, share_cache=False)
-    )
-    removed16 = rows(
-        remove_duplicate_spans(df, k=k, n_salts=16, share_cache=False)
-    )
+    removed1 = rows(remove_duplicate_spans(df, k=k, n_salts=1))
+    removed16 = rows(remove_duplicate_spans(df, k=k, n_salts=16))
     assert removed1 == removed16
 
     profile1 = rows(duplicate_window_profile(df, k=k, n_salts=1))
